@@ -1,8 +1,10 @@
 """Provenance *query* operators (SURVEY.md §2.2) — the analytical surface
 the reference serves over REST (SAMbA/WebApplication/.../ExecutionAPICtrl.kt,
-TaskAPICtrl.kt, DataElementAPICtrl.kt:42-320). Here they are plain Spark SQL
-over the provenance tables, so they distribute; the reference assembles
-graphs in the web server's memory.
+TaskAPICtrl.kt, DataElementAPICtrl.kt:42-320). The table queries are plain
+Spark SQL over the provenance tables, so they distribute. Transitive lineage
+is one min-hop BFS in driver memory over the run's element_deps, read with
+pyarrow (``lineage_walk``), as the reference walks it in the web server's
+memory (DataElementAPICtrl.kt:140-179); ``prov.webapi`` serves it directly.
 """
 
 from __future__ import annotations
@@ -10,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from samba_spark.operators.guards import tiny_df
 from samba_spark.operators.wrapper import DROP_SENTINEL_PREFIX
 
 
@@ -66,57 +69,44 @@ def elements_consumed_by_task(store, run_id: str, task_id: str) -> DataFrame:
     )
 
 
-def transitive_lineage(
-    store, run_id: str, element_ids: list[str], direction: str = "up", max_hops: int = 50
-) -> DataFrame:
-    """Transitive closure from a set of elements — BFS by iterative join
-    (the reference walks the graph in server memory,
-    DataElementAPICtrl.kt:140-179; ours distributes each hop).
+def lineage_walk(
+    store, run_id: str, element_ids, direction: str = "up", max_hops: int = 50
+) -> dict[str, int]:
+    """Min-hop BFS from ``element_ids`` over the run's element_deps, in
+    driver memory: element_id → hop, roots at hop 0, nothing beyond
+    ``max_hops``. direction: 'up' = ancestors, 'down' = descendants.
 
-    Returns (element_id, hop). direction: 'up' = ancestors, 'down' = descendants.
-    """
-    spark = store.spark
+    The two id columns are read with ``store.read_arrow``: no Spark job
+    and no flush, so the walk sees the flushed store only."""
     src, dst = ("element_id", "dep_element_id") if direction == "up" else (
         "dep_element_id", "element_id"
     )
-    edges = (
-        store.table("element_deps")
-        .where(F.col("run_id") == run_id)
-        .select(F.col(src).alias("_edge_src"), F.col(dst).alias("_edge_dst"))
-        .cache()
-    )
-    frontier = spark.createDataFrame(
-        [(e,) for e in element_ids], "element_id string"
-    ).withColumn("hop", F.lit(0))
-    seen = frontier
+    edges = store.read_arrow("element_deps", [src, dst], run_id=run_id)
+    adjacent: dict[str, list[str]] = {}
+    for s, d in zip(edges[src].to_pylist(), edges[dst].to_pylist()):
+        adjacent.setdefault(s, []).append(d)
+    hops = dict.fromkeys(element_ids, 0)
+    frontier = list(hops)
     for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(edges, frontier.element_id == F.col("_edge_src"), "inner")
-            .select(F.col("_edge_dst").alias("element_id"))
-            .distinct()
-            .join(seen.select("element_id"), "element_id", "left_anti")
-            .withColumn("hop", F.lit(hop))
-        )
-        # Iterative algorithm: the lazy localCheckpoint truncates the
-        # growing plan and the isEmpty probe is the materializing action
-        # (one job per hop instead of two); the driver sync per hop is
-        # the unavoidable part.
-        nxt = nxt.localCheckpoint(eager=False)
-        if nxt.isEmpty():
+        nxt = []
+        for e in frontier:
+            for n in adjacent.get(e, ()):
+                if n not in hops:
+                    hops[n] = hop
+                    nxt.append(n)
+        if not nxt:
             break
-        seen = seen.unionByName(nxt).localCheckpoint(eager=False)
         frontier = nxt
-    edges.unpersist()
-    return seen
+    return hops
 
 
-def element_detail(store, run_id: str, element_id: str) -> DataFrame:
-    """Element value table with its task's schema header
-    (reference DataElementAPICtrl.kt:181-233)."""
-    e = store.table("elements").where(
-        (F.col("run_id") == run_id) & (F.col("element_id") == element_id)
-    )
-    t = store.table("tasks").where(F.col("run_id") == run_id).select(
-        "task_id", "schema_fields", "description"
-    )
-    return e.join(t, "task_id", "left")
+def transitive_lineage(
+    store, run_id: str, element_ids: list[str], direction: str = "up", max_hops: int = 50
+) -> DataFrame:
+    """Transitive closure from a set of elements as an (element_id, hop)
+    DataFrame: ``lineage_walk``'s result, after a flush so the caller's
+    own captures are included. direction: 'up' = ancestors, 'down' =
+    descendants."""
+    store.flush()
+    hops = lineage_walk(store, run_id, element_ids, direction, max_hops)
+    return tiny_df(store.spark, list(hops.items()), "element_id string, hop int")

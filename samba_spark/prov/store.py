@@ -5,6 +5,8 @@ filegroup_refs) is buffered in memory and flushed as small parquet files —
 these tables are O(#operators), tiny. Element-level tables (elements,
 element_deps) are written as *distributed* DataFrame appends: at 100 TB the
 element tables dwarf the data, so they must never pass through the driver.
+``read_arrow`` is the read-only serving path: pyarrow scans of the flushed
+files, with no Spark job and no flush.
 
 Reference contrast: SAMbA issues one async Cassandra insert per record from
 each executor (br/uff/spark/database/CassandraDBDao.scala:131-142); we write
@@ -66,9 +68,17 @@ def _write_rows_parquet(dir_path: str, rows: list[tuple], spark_schema) -> None:
     arrays = [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)]
     table = pa.Table.from_arrays(arrays, schema=schema)
     os.makedirs(dir_path, exist_ok=True)
-    pq.write_table(
-        table, os.path.join(dir_path, f"part-{uuid.uuid4().hex}.parquet")
-    )
+    # Readers do not wait for a flush, so the file appears whole or not at
+    # all: it is written under a dot-prefixed name (Spark, pyarrow and the
+    # ``*.parquet`` globs all skip it) and renamed into place.
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(dir_path, f".{name}.tmp")
+    try:
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(dir_path, name))
+    finally:
+        if os.path.exists(tmp):  # only when the write or rename failed
+            os.remove(tmp)
 
 
 class ProvStore:
@@ -522,6 +532,39 @@ class ProvStore:
                 .drop("_rn")
             )
         return df
+
+    def read_arrow(self, name: str, columns=None, **where):
+        """Read-only view of a provenance table as a pyarrow Table, read
+        straight from its parquet files: no Spark job and no flush, so it
+        sees what has been flushed and nothing buffered. ``columns``
+        projects; each ``where`` item is pushed down as ``column == value``
+        (``isin`` for a list, set or tuple). A table with no directory yet
+        reads as empty. ``executions`` keeps :meth:`table`'s rule: one row
+        per run, the completed row winning over an open one."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        schema = _arrow_schema(model.TABLES[name])
+        path = os.path.join(self.prov_dir, name)
+        if not os.path.isdir(path):
+            return schema.empty_table().select(columns or schema.names)
+        flt = None
+        for col, val in where.items():
+            if isinstance(val, (list, set, tuple)):
+                e = ds.field(col).isin(pa.array(list(val), schema.field(col).type))
+            else:
+                e = ds.field(col) == val
+            flt = e if flt is None else flt & e
+        dataset = ds.dataset(path, schema=schema, format="parquet")
+        if name != "executions":
+            return dataset.to_table(columns=columns, filter=flt)
+        # completed rows sort first (nulls last), then the first row per run
+        t = dataset.to_table(filter=flt).sort_by([("end_time", "descending")])
+        first = {}
+        for i, run_id in enumerate(t["run_id"].to_pylist()):
+            first.setdefault(run_id, i)
+        keep = pa.array(list(first.values()), pa.int64())
+        return t.take(keep).select(columns or schema.names)
 
     def export_graph_distributed(self, run_id: str, out_dir: str) -> None:
         """A16 at scale: stream the element graph as JSON-lines directories

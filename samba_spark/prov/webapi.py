@@ -4,14 +4,16 @@ web application (SAMbA/WebApplication/src/main/kotlin/br/uff/samba/web/
 controllers/ExecutionAPICtrl.kt:15-27, TaskAPICtrl.kt:15-61,
 DataElementAPICtrl.kt:29-320).
 
-Architecture split, deliberately different from the reference: the
-reference's Spring controllers issue per-endpoint CQL and assemble the
-lineage graph **in the web server's memory** (DataElementAPICtrl.kt:42-103).
-Here every endpoint delegates to the distributed Spark queries in
-``prov.queries`` — the cluster does the joins/BFS — and the HTTP layer only
-serializes the (graph-sized, not data-sized) result. The ``.collect()``
-calls in this module are therefore presentation-boundary actions on result
-sets bounded by the provenance graph, never by the data volume.
+The lineage routes (execution, task and dataelement graph/graphOfTask/
+table) are read-only and Spark-free: each handler reads the parquet files
+with pyarrow (``ProvStore.read_arrow``, pushing the run/task/element ids
+down as filters) and assembles the small, graph-sized answer in the web
+server's memory, as the reference's Spring controllers do
+(DataElementAPICtrl.kt:42-179). Transitive walks run the in-memory BFS of
+``prov.queries.lineage_walk``. A request starts no Spark job, never
+flushes the store's write buffers and keeps no cache, so it sees exactly
+what has been flushed. The file-tree and download routes still read the
+ArtifactStore manifest through Spark.
 
 Pure stdlib (http.server + json): no web framework is required, matching
 the survey's "optional thin HTTP" scoping. ``ProvWebAPI.handle`` is a pure
@@ -47,6 +49,7 @@ from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import functions as F
 
+from samba_spark.operators.wrapper import DROP_SENTINEL_PREFIX
 from samba_spark.prov import queries as Q
 
 # Task-node color legend, one color per transformation type — the web UI
@@ -100,6 +103,9 @@ class ProvWebAPI:
     def __init__(self, store, artifacts=None):
         self.store = store
         self.artifacts = artifacts
+
+    def _read(self, table: str, columns=None, **where) -> list[dict]:
+        return self.store.read_arrow(table, columns, **where).to_pylist()
 
     # -- dispatch ----------------------------------------------------------
     def handle(self, path: str, params: dict[str, str]) -> tuple[int, str, Any]:
@@ -173,12 +179,10 @@ class ProvWebAPI:
 
     # -- executions --------------------------------------------------------
     def list_executions(self) -> list[dict]:
-        return _rows(Q.list_executions(self.store))
+        return self._read("executions")
 
     def find_execution(self, run_id: str) -> dict:
-        rows = _rows(
-            Q.list_executions(self.store).where(F.col("run_id") == run_id)
-        )
+        rows = self._read("executions", run_id=run_id)
         if not rows:
             raise HTTPError(404, f"execution {run_id} not found")
         return rows[0]
@@ -186,18 +190,23 @@ class ProvWebAPI:
     # -- tasks -------------------------------------------------------------
     def task_graph(self, run_id: str) -> dict:
         """Task DAG as {nodes, edges} (TaskAPICtrl.kt:22-35)."""
-        rows = _rows(Q.task_dag(self.store, run_id))
+        upstream: dict[str, list[str]] = {}
+        for d in self._read("task_deps", ["task_id", "dep_task_id"], run_id=run_id):
+            upstream.setdefault(d["task_id"], []).append(d["dep_task_id"])
         nodes, edges = {}, []
-        for r in rows:
-            nodes[r["task_id"]] = {
-                "id": r["task_id"],
-                "transformation_type": r["transformation_type"],
-                "description": r["description"],
+        for t in self._read(
+            "tasks", ["task_id", "transformation_type", "description"],
+            run_id=run_id,
+        ):
+            nodes[t["task_id"]] = {
+                "id": t["task_id"],
+                "transformation_type": t["transformation_type"],
+                "description": t["description"],
             }
-            if r["upstream_task_id"]:
-                edges.append(
-                    {"source": r["upstream_task_id"], "target": r["task_id"]}
-                )
+            edges += [
+                {"source": u, "target": t["task_id"]}
+                for u in upstream.get(t["task_id"], ())
+            ]
         return {"nodes": list(nodes.values()), "edges": edges}
 
     def task_info(self, run_id: str, task_id: str) -> dict:
@@ -213,13 +222,21 @@ class ProvWebAPI:
     # -- element lineage ---------------------------------------------------
     def element_graph(self, run_id: str, include_dropped: bool = False) -> dict:
         """Full element lineage graph with the per-task color legend
-        (DataElementAPICtrl.kt:42-103)."""
-        edges = _rows(Q.element_graph(self.store, run_id, include_dropped))
-        tasks = _rows(
-            self.store.table("tasks")
-            .where(F.col("run_id") == run_id)
-            .select("task_id", "transformation_type")
+        (DataElementAPICtrl.kt:42-103). Drop-sentinel elements are hidden
+        by default, matching the web UI's substring filter
+        (DataElementAPICtrl.kt:80)."""
+        import pyarrow.compute as pc
+
+        deps = self.store.read_arrow(
+            "element_deps", ["dep_element_id", "element_id", "task_id"],
+            run_id=run_id,
         )
+        if not include_dropped:
+            deps = deps.filter(pc.invert(
+                pc.starts_with(deps["element_id"], DROP_SENTINEL_PREFIX)
+            ))
+        edges = deps.rename_columns(["source", "target", "task"]).to_pylist()
+        tasks = self._read("tasks", ["task_id", "transformation_type"], run_id=run_id)
         legend = {
             t["task_id"]: {
                 "transformation_type": t["transformation_type"],
@@ -244,46 +261,46 @@ class ProvWebAPI:
         transitive: bool = False,
     ) -> dict:
         """Elements produced/consumed by one task, optionally expanded to
-        the transitive closure (DataElementAPICtrl.kt:106-179; the
-        reference walks the graph in server memory, ours runs the
-        distributed BFS in prov.queries.transitive_lineage)."""
-        produced = _rows(
-            Q.elements_of_task(self.store, run_id, task_id).select("element_id")
-        )
-        consumed = _rows(
-            Q.elements_consumed_by_task(self.store, run_id, task_id).select(
-                "element_id"
-            )
-        )
+        the transitive closure (DataElementAPICtrl.kt:106-179). Produced:
+        the task's elements. Consumed: the distinct inputs of the task's
+        deps that exist in ``elements``."""
+        def ids(table, column, **where):
+            t = self.store.read_arrow(table, [column], run_id=run_id, **where)
+            return t[column].to_pylist()
+
+        produced = ids("elements", "element_id", task_id=task_id)
+        inputs = list(dict.fromkeys(ids("element_deps", "dep_element_id", task_id=task_id)))
+        known = set(ids("elements", "element_id", element_id=inputs))
         out = {
             "task_id": task_id,
-            "produced": [r["element_id"] for r in produced],
-            "consumed": [r["element_id"] for r in consumed],
+            "produced": produced,
+            "consumed": [e for e in inputs if e in known],
         }
         if transitive:
             roots = out["produced"] if direction == "down" else out["consumed"]
-            closure = _rows(
-                Q.transitive_lineage(self.store, run_id, roots, direction)
-            )
-            out["transitive"] = sorted(
-                (r["element_id"], r["hop"]) for r in closure
-            )
+            hops = Q.lineage_walk(self.store, run_id, roots, direction)
+            out["transitive"] = sorted(hops.items())
         return out
 
     def element_table(self, run_id: str, element_id: str) -> dict:
         """Element values rendered under their task's schema header
         (DataElementAPICtrl.kt:181-233)."""
-        rows = _rows(Q.element_detail(self.store, run_id, element_id))
+        rows = self._read("elements", run_id=run_id, element_id=element_id)
         if not rows:
             raise HTTPError(404, f"element {element_id} not found")
         r = rows[0]
+        tasks = self._read(
+            "tasks", ["schema_fields", "description"],
+            run_id=run_id, task_id=r["task_id"],
+        )
+        task = tasks[0] if tasks else {}
         return {
             "element_id": r["element_id"],
             "task_id": r["task_id"],
-            "schema": r.get("schema_fields") or [],
-            "values": r.get("values") or [],
-            "value_json": r.get("value_json"),
-            "task_description": r.get("description"),
+            "schema": task.get("schema_fields") or [],
+            "values": r["values"] or [],
+            "value_json": r["value_json"],
+            "task_description": task.get("description"),
         }
 
     # -- artifacts (git analogue) -------------------------------------------

@@ -2353,8 +2353,8 @@ Q59_PROV_DIR = scratch_dir("q59_prov")
 def q59_transitive_lineage(spark, sf_dir):
     """Transitive element lineage as a hop histogram: capture a
     source→join→agg pipeline with element provenance, then BFS upward
-    from the aggregate's output elements with the distributed
-    transitive_lineage operator (prov/queries.py, reference
+    from the aggregate's output elements with the transitive_lineage
+    operator (prov/queries.py: a BFS in driver memory, as reference
     DataElementAPICtrl.kt:140-179 walks the same closure in server
     memory). Element ids are uuids, so the comparable surface is
     (hop, count): agg outputs at hop 0, join rows at 1, source rows at

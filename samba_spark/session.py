@@ -211,15 +211,6 @@ class ProvSession:
             self, readers.read_binary(self.spark, path), op="binaryFiles", desc=path
         )
 
-    def sql(self, query: str, name: str = "sql"):
-        """Spark SQL passthrough with a provenance task (the reference has
-        no SQL surface of its own — SURVEY.md §0 Layer B)."""
-        from samba_spark.operators.wrapper import ProvDataFrame
-
-        return ProvDataFrame._source(
-            self, self.spark.sql(query), op="sql", desc=query[:200]
-        )
-
     def create_dataframe(self, data, schema=None, name: str = "parallelize"):
         from samba_spark.operators.wrapper import ProvDataFrame
 

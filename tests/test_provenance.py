@@ -398,3 +398,43 @@ def test_end_time_survives_midrun_flush(spark, sf_smoke, tmp_path):
     fin = ps.store.table("executions").collect()
     assert len(fin) == 1, "dedup must keep exactly one row per run"
     assert fin[0]["end_time"] is not None
+
+
+def test_failed_metadata_write_leaves_no_visible_part(tmp_path, monkeypatch):
+    """Metadata parquet is written under a dot-prefixed temp name and
+    renamed into place, so a reader that does not wait for a flush never
+    opens a half-written file: a write that fails midway leaves no
+    ``part-*.parquet`` (and no temp file) behind."""
+    import pyarrow.parquet as pq
+
+    from samba_spark.prov import model
+    from samba_spark.prov.store import _write_rows_parquet
+
+    d = tmp_path / "executions"
+    _write_rows_parquet(str(d), [("r0", "ok", 1.0, None)], model.EXECUTIONS)
+    written = sorted(p.name for p in d.iterdir())
+    assert len(written) == 1 and written[0].startswith("part-")
+
+    def torn_write(table, where, **kw):
+        with open(where, "wb") as fh:
+            fh.write(b"PAR1")  # header only, then the disk fills up
+        raise OSError("no space left on device")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    with pytest.raises(OSError):
+        _write_rows_parquet(str(d), [("r1", "torn", 2.0, None)], model.EXECUTIONS)
+    assert sorted(p.name for p in d.iterdir()) == written
+
+
+def test_sql_records_name_as_description(engine):
+    """ProvSession.sql records ``name=`` as the task description (the
+    query text when no name is given)."""
+    named = engine.sql("SELECT 1 AS one", name="x")
+    unnamed = engine.sql("  SELECT 2 AS two ")
+    engine.store.flush()
+    tasks = engine.store.read_arrow(
+        "tasks", ["task_id", "description"], run_id=engine.run_id
+    ).to_pylist()
+    desc = {r["task_id"]: r["description"] for r in tasks}
+    assert desc[named.task_id] == "x"
+    assert desc[unnamed.task_id] == "SELECT 2 AS two"

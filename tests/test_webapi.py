@@ -1,17 +1,22 @@
 """A19 thin HTTP layer: the reference's web-query REST surface
-(ExecutionAPICtrl / TaskAPICtrl / DataElementAPICtrl) served stdlib-only
-over the distributed prov queries. Route dispatch is tested purely
-(ProvWebAPI.handle), plus one real socket round trip per endpoint family.
+(ExecutionAPICtrl / TaskAPICtrl / DataElementAPICtrl) served stdlib-only,
+the lineage routes from pyarrow reads of the store parquet with no Spark
+job. Route dispatch is tested purely (ProvWebAPI.handle), plus one real
+socket round trip per endpoint family.
 """
 
 import json
 import os
 import urllib.request
+import uuid
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from samba_spark.artifacts import ArtifactStore
+from samba_spark.prov import model
+from samba_spark.prov.store import ProvStore
 from samba_spark.sources.filegroup import FileGroupTemplate
 from samba_spark.prov.webapi import ProvWebAPI
 
@@ -34,6 +39,8 @@ def api(engine, sf_smoke, tmp_path):
     groups = engine.file_groups(t)
     store = ArtifactStore(str(tmp_path / "artifacts"))
     store.commit(groups)
+    # the web API serves what has been flushed and never flushes itself
+    engine.store.flush()
 
     yield ProvWebAPI(engine.store, artifacts=store), engine, kept
 
@@ -204,3 +211,164 @@ def test_html_frontend_served_over_socket(api):
                 assert route in page, route
     finally:
         srv.shutdown()
+
+
+def _lineage_routes(run_id, task_id, element_id):
+    """(path, params) of every lineage route, transitive walks included."""
+    got = f"/api/dataelement/graphOfTask/{run_id}"
+    return [
+        ("/api/execution/list", {}),
+        (f"/api/execution/find/{run_id}", {}),
+        (f"/api/task/graph/{run_id}", {}),
+        (f"/api/task/info/{run_id}", {"taskID": task_id}),
+        (f"/api/dataelement/graph/{run_id}", {}),
+        (f"/api/dataelement/graph/{run_id}", {"includeDropped": "true"}),
+        (got, {"taskID": task_id}),
+        (got, {"taskID": task_id, "transitive": "true", "direction": "up"}),
+        (got, {"taskID": task_id, "transitive": "true", "direction": "down"}),
+        (f"/api/dataelement/table/{element_id}", {"executionID": run_id}),
+    ]
+
+
+def _first_element(web, run_id, task_id):
+    _, g = _get(web, f"/api/dataelement/graphOfTask/{run_id}", taskID=task_id)
+    return g["produced"][0]
+
+
+def test_lineage_routes_start_no_spark_job(api, spark):
+    """Every lineage route is served without a Spark job, counted from the
+    status tracker under one job group per route."""
+    web, engine, kept = api
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(call):
+        group = f"webapi-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, tracker.getJobIdsForGroup(group)
+
+    # the probe sees a job when there is one
+    assert jobs_of(lambda: spark.range(3).count())[1]
+    element = _first_element(web, engine.run_id, kept.task_id)
+    for path, params in _lineage_routes(engine.run_id, kept.task_id, element):
+        (status, _), jobs = jobs_of(lambda: _get(web, path, **params))
+        assert status == 200 and jobs == [], (path, params, status, jobs)
+
+
+def _listing(root):
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), root), os.path.getsize(os.path.join(d, f)))
+        for d, _, files in os.walk(root)
+        for f in files
+    )
+
+
+def test_serving_is_read_only(api, spark):
+    """Requests against a store with buffered rows leave the buffers, the
+    queued element batches and the files on disk as they were, and do not
+    see the buffered rows."""
+    web, engine, kept = api
+    store = engine.store
+    store.write_task(engine.run_id, "pending-task", "filter", "pending", [],
+                     [kept.task_id])
+    store.append_elements(spark.createDataFrame([], model.ELEMENTS))
+    buffers = {k: list(v) for k, v in store._buffers.items()}
+    queued = {k: list(v) for k, v in store._pending_dfs.items()}
+    files = _listing(store.prov_dir)
+
+    element = _first_element(web, engine.run_id, kept.task_id)
+    for path, params in _lineage_routes(engine.run_id, kept.task_id, element):
+        assert _get(web, path, **params)[0] == 200, (path, params)
+    status, _ = _get(web, f"/api/task/info/{engine.run_id}",
+                     taskID="pending-task")
+    assert status == 404  # buffered, not flushed: not served
+
+    assert {k: list(v) for k, v in store._buffers.items()} == buffers
+    assert {k: list(v) for k, v in store._pending_dfs.items()} == queued
+    assert _listing(store.prov_dir) == files
+
+
+def test_midrun_flushed_run_listed_once(spark, tmp_path):
+    """A run whose open row was flushed before it finished has two rows on
+    disk; the API lists it once, with its end_time."""
+    import pyarrow.parquet as pq
+
+    store = ProvStore(spark, str(tmp_path / "prov"))
+    store.write_execution("run-1", "midrun", 1.0)
+    store.flush()
+    store.finish_execution("run-1", 2.0)
+    store.flush()
+    assert pq.read_table(str(tmp_path / "prov" / "executions")).num_rows == 2
+
+    web = ProvWebAPI(store)
+    status, execs = _get(web, "/api/execution/list")
+    assert status == 200
+    assert [(e["run_id"], e["end_time"]) for e in execs] == [("run-1", 2.0)]
+    status, found = _get(web, "/api/execution/find/run-1")
+    assert status == 200 and found["end_time"] == 2.0
+
+
+def _duckdb_walk(prov, run_id, task_id, direction):
+    """The q59 oracle shape: a recursive CTE over the store parquet, min
+    hop per element; roots are the task's elements (down) or the distinct
+    stored inputs of its deps (up)."""
+    e = f"read_parquet('{prov}/elements/*.parquet')"
+    d = f"read_parquet('{prov}/element_deps/*.parquet')"
+    if direction == "down":
+        roots = f"SELECT element_id FROM {e} WHERE run_id = $run AND task_id = $task"
+        step = ("SELECT x.element_id, w.hop + 1 FROM walk w "
+                "JOIN deps x ON x.dep_element_id = w.element_id")
+    else:
+        roots = (f"SELECT DISTINCT c.dep_element_id AS element_id FROM {d} c "
+                 f"JOIN {e} el ON el.element_id = c.dep_element_id "
+                 "WHERE c.run_id = $run AND c.task_id = $task")
+        step = ("SELECT x.dep_element_id, w.hop + 1 FROM walk w "
+                "JOIN deps x ON x.element_id = w.element_id")
+    sql = f"""
+        WITH RECURSIVE deps AS (
+          SELECT element_id, dep_element_id FROM {d} WHERE run_id = $run),
+        walk(element_id, hop) AS (
+          SELECT element_id, 0 FROM ({roots}) r
+          UNION
+          {step})
+        SELECT element_id, min(hop) FROM walk GROUP BY element_id"""
+    con = duckdb.connect()
+    try:
+        rows = con.execute(sql, {"run": run_id, "task": task_id}).fetchall()
+    finally:
+        con.close()
+    return sorted(rows)
+
+
+def test_walk_matches_duckdb_recursive_cte(engine, sf_smoke):
+    """Transitive graphOfTask, up and down, on a filter → join → agg
+    pipeline, against the DuckDB recursive-CTE replay of the walk."""
+    nation = engine.read_parquet(f"{sf_smoke}/nation.parquet", "nation").with_elements()
+    region = engine.read_parquet(f"{sf_smoke}/region.parquet", "region").with_elements()
+    nation.persist_elements()
+    region.persist_elements()
+    kept = nation.where(F.col("n_nationkey") < 20).set_name("keep")
+    kept.persist_elements()
+    joined = kept.join(
+        region, on=kept.raw.n_regionkey == region.raw.r_regionkey, how="inner"
+    )
+    joined.persist_elements()
+    agged = joined.group_by("r_name").agg(F.count(F.lit(1)).alias("cnt"))
+    agged.persist_elements()
+    agged.collect()
+    engine.store.flush()
+
+    web, run, prov = ProvWebAPI(engine.store), engine.run_id, engine.store.prov_dir
+    cases = [(agged.task_id, "up", 2), (nation.task_id, "down", 3),
+             (joined.task_id, "up", 1), (kept.task_id, "down", 2)]
+    for task_id, direction, deepest in cases:
+        status, g = _get(web, f"/api/dataelement/graphOfTask/{run}",
+                         taskID=task_id, transitive="true", direction=direction)
+        assert status == 200
+        got = sorted(tuple(x) for x in g["transitive"])
+        assert got == _duckdb_walk(prov, run, task_id, direction), (task_id, direction)
+        assert max(h for _, h in got) == deepest, (task_id, direction)
