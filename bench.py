@@ -23,9 +23,9 @@ isolated probes):
   JVM, JIT state, and codegen cache, which is exactly the contested
   context).
 * ``--out NAME`` names the artifact explicitly. Without it the
-  auto-name bench_full_r{N}[_sf*][_runK].json REFUSES to overwrite an
+  auto-name bench_full[_sf*][_runK].json REFUSES to overwrite an
   existing file (appends _runK) — a degraded late-session run can no
-  longer clobber the round's canonical artifact (VERDICT r8
+  longer clobber the canonical artifact (VERDICT r8
   what's-wrong #1). ``--out`` itself also refuses an existing file
   unless ``--force`` is given (ADVICE r9: --out bypassed the
   no-clobber guard entirely).
@@ -215,7 +215,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--out", default=None,
-        help="artifact filename (default: auto bench_full_r{N}...json, "
+        help="artifact filename (default: auto bench_full[_sf*].json, "
         "never overwriting an existing file)",
     )
     ap.add_argument(
@@ -472,25 +472,15 @@ def main() -> None:
         "element_overhead_ratio_10x": elem_ratio_10x,
     }
 
-    # The driver's BENCH_r{N}.json captures a bounded stdout window: the
-    # round-4 artifact failed to parse because the full 200+-entry
-    # per-query map pushed the JSON line past it (VERDICT r4 item 2 /
-    # "what's wrong" #2). The FULL payload is persisted to
-    # bench_full_r{N}.json below; stdout gets ONE compact final line —
-    # same metric/value/unit/queries/sf contract, with the per-query map
-    # bounded to the 20 slowest queries and a pointer to the full file.
-    import glob
-
+    # stdout is read through a bounded window: a full 200+-entry
+    # per-query map once pushed the JSON line past it. The FULL payload
+    # is persisted to bench_full[_sf*].json below; stdout gets ONE
+    # compact final line — same metric/value/unit/queries/sf contract,
+    # with the per-query map bounded to the 20 slowest queries and a
+    # pointer to the full file.
     here = os.path.dirname(os.path.abspath(__file__))
-    rounds = []
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m2 = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m2:
-            rounds.append(int(m2.group(1)))
-    n = (max(rounds) + 1) if rounds else 0
-    # The canonical per-round artifact is the sf0.1 run (what the driver
-    # executes). Ad-hoc runs at other SFs get an SF-qualified name so they
-    # can never clobber the round's comparison baseline.
+    # The canonical artifact is the sf0.1 run. Ad-hoc runs at other SFs
+    # get an SF-qualified name so they can never clobber the baseline.
     suffix = "" if sf == 0.1 else f"_sf{sf}"
     if args.out:
         full_name = args.out
@@ -510,15 +500,15 @@ def main() -> None:
                 file=sys.stderr,
             )
     else:
-        full_name = f"bench_full_r{n:02d}{suffix}.json"
+        full_name = f"bench_full{suffix}.json"
         # NEVER overwrite an existing artifact (VERDICT r8 what's-wrong
         # #1: a degraded end-of-session run clobbered the canonical
-        # best-of-3 under the same name) — later same-round runs get
-        # distinct _runK names; promoting one to canonical is a
-        # deliberate rename, not a side effect.
+        # best-of-3 under the same name) — later runs get distinct _runK
+        # names; promoting one to canonical is a deliberate rename, not
+        # a side effect.
         k = 2
         while os.path.exists(os.path.join(here, full_name)):
-            full_name = f"bench_full_r{n:02d}{suffix}_run{k}.json"
+            full_name = f"bench_full{suffix}_run{k}.json"
             k += 1
     with open(os.path.join(here, full_name), "w") as fh:
         json.dump(payload, fh, indent=1)

@@ -20,6 +20,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from samba_spark.artifacts import ArtifactStore
 from samba_spark.blackbox import run_scientific_application, save_files_at
 from samba_spark.session import ProvSession, get_spark
 from samba_spark.sources.filegroup import FileGroupTemplate
@@ -45,7 +46,6 @@ def main() -> None:
         spark,
         name="sciphy_like",
         prov_dir=os.path.join(workspace, "prov"),
-        version_control=True,
     )
 
     # -- the 4-stage chain (align → convert → model → tree in the
@@ -67,6 +67,8 @@ def main() -> None:
         name="Report",
     )
 
+    # A2 (the reference's spark.sciSpark.versionControl): an explicit commit
+    ArtifactStore(os.path.join(workspace, "artifacts")).commit(report)
     out_dir = os.path.join(workspace, "output")
     save_files_at(report, out_dir)
 

@@ -112,7 +112,8 @@ class ArtifactStore:
         # task.description/fileGroup.name/, VersionControl.scala:85-129).
         run_dir = os.path.join(self.root, "runs", run_id, pdf.task_id)
         manifest.write.mode("append").parquet(run_dir)
-        written = session.spark.read.parquet(run_dir)
+        # An explicit schema: inferring it would start a footer-reading job.
+        written = session.spark.read.schema(MANIFEST_SCHEMA).parquet(run_dir)
         # provenance link: element → artifact folder (fileGroupReference).
         # Distributed append straight from the manifest — no driver collect
         # loop; at millions of groups this is one small shuffle + write.
@@ -131,11 +132,9 @@ class ArtifactStore:
         with open(self.blob_path(sha), "rb") as fh:
             return fh.read()
 
-    def file_tree(self, spark, run_id: str, group_name: Optional[str] = None) -> DataFrame:
-        """File-tree listing for a run/group (reference web API
+    def file_tree(self, spark, run_id: str) -> DataFrame:
+        """File-tree listing for a run (reference web API
         DataElementAPICtrl.kt:235-314 resolves trees via JGit TreeWalk)."""
         run_dir = os.path.join(self.root, "runs", run_id, "*")
         df = spark.read.schema(MANIFEST_SCHEMA).parquet(run_dir)
-        if group_name is not None:
-            df = df.where(F.col("group_name") == group_name)
         return df.select("group_name", "file_name", "size", "modified", "sha256")

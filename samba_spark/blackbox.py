@@ -265,7 +265,11 @@ def save_files_at(pdf, directory: str, *, by: str = "group") -> None:
     """A8: write each FileGroup's files under ``directory/<key>/``
     (reference FileGroupRDDFunctions.scala:73-87 writes under
     dir/<dataElementID>/; ``by='element'`` reproduces that when element
-    provenance is on, default is the stable group name)."""
+    provenance is on, default is the stable group name).
+
+    A key that names no subdirectory of its own (empty, ``.`` or ``..``)
+    would write into ``directory`` or its parent: such groups are not
+    written, and the call raises ``ValueError`` naming them."""
     os.makedirs(directory, exist_ok=True)
     use_element = by == "element" and pdf.elements_enabled
     key_col = PROV_ID if use_element else "group_name"
@@ -273,14 +277,26 @@ def save_files_at(pdf, directory: str, *, by: str = "group") -> None:
     rows = src.select(key_col, "files")
 
     def _write(partition):
+        unsafe = []
         for row in partition:
-            sub = os.path.join(directory, str(row[0]).replace("/", "_"))
+            key = str(row[0]).replace("/", "_")
+            if key in ("", ".", ".."):
+                unsafe.append(row[0])
+                continue
+            sub = os.path.join(directory, key)
             os.makedirs(sub, exist_ok=True)
             for f in row[1] or []:
                 with open(os.path.join(sub, f["name"]), "wb") as fh:
                     fh.write(resolve_file_content(f))
+        return unsafe
 
-    rows.foreachPartition(_write)
+    # one job, like foreachPartition, but it returns the rejected keys
+    unsafe = rows.rdd.mapPartitions(_write).collect()
+    if unsafe:
+        raise ValueError(
+            f"save_files_at: group keys {sorted(map(str, unsafe))} name no "
+            f"subdirectory of {directory!r}"
+        )
 
 
 def save_files_at_async(pdf, directory: str, *, by: str = "group"):

@@ -1365,9 +1365,12 @@ def save_minhash_index(
     as ``band_buckets=0``, and :func:`merge_minhash_indexes` refuses a
     layout mismatch (migration path: rebuild via save, or merge into a
     same-layout destination). Default stays flat because bucketing
-    multiplies small files below multi-GB index sizes — measured at
-    sf0.1 the per-dir open cost exceeds the pruning win; the crossover
-    is documented in OPTIMIZATION_r12.md.
+    multiplies small files below multi-GB index sizes — at sf0.1 the
+    whole bands dataset is ~17 MB, and the bucketed probe measured net
+    slower: the per-dir open cost and the per-probe bucket collect
+    exceed the pruning win. The crossover is where the bands scan
+    dominates the probe's fixed costs (multi-GB indexes); the write-up
+    is ``git show 92ce187:OPTIMIZATION_r12.md`` (batch 4).
     """
     if num_hashes % bands != 0:
         raise ValueError(

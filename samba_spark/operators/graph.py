@@ -175,15 +175,18 @@ def triangle_count(
     edge (u,w) by array_intersect(N+(u), N+(v)) — every shuffle
     edge-sized, no wedge-volume exchange) was implemented, proven
     equivalent (oracle hash-green at sf0.001/0.01/0.1) and MEASURED
-    SLOWER: 0.62x at sf0.1 (interleaved median-of-3, committed in
-    OPTIMIZATION_r12.md). Two reasons: AQE already BROADCASTS the wedge
+    SLOWER: 0.62x at sf0.1 (interleaved median-of-3, 5.29 s wedge vs
+    8.58 s intersection; ``git show 92ce187:OPTIMIZATION_r12.md``,
+    batch 3). Two reasons: AQE already BROADCASTS the wedge
     self-join's build side at admission scales, so the feared (v2,v3)
     wedge exchange never materializes below multi-GB edge tables; and
     on dense graphs (the x55 fixture: <=499 vertices) the per-edge
     array_intersect over ~degree-sized arrays costs more than the
     joins it replaces. The wedge form stays; the intersection form's
-    plan and numbers are preserved in plans/r12 for the day an edge
-    table is large AND sparse enough to flip the trade."""
+    plan is ``git show
+    92ce187:plans/r12/x55_triangle_count_intersect_rejected.txt``, kept
+    for the day an edge table is large AND sparse enough to flip the
+    trade."""
     e = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),

@@ -225,21 +225,18 @@ class ProvDataFrame:
         )
         return out
 
-    def persist_elements(
-        self, include_json: Optional[bool] = None
-    ) -> "ProvDataFrame":
+    def persist_elements(self) -> "ProvDataFrame":
         """Write this operator's element + element-dep rows (distributed
         batch appends — the analogue of the reference's per-element async
         CQL, CassandraDBDao.scala:131-142).
 
         ``value_json`` (our lossless-JSON extra; the reference stores only
         the stringified ``values`` list, CassandraDatabaseScript.cql) is
-        captured only when ``include_json=True`` (or the session-wide
-        ``capture_value_json`` flag): serializing every row TWICE —
-        values array AND to_json struct — measurably doubled the
-        element-write CPU for a column nothing in the query surface reads
-        by default. The schema keeps the column (NULL when off), and
-        explicit ``update_element_value`` overrides still store JSON."""
+        written NULL: serializing every row TWICE — values array AND
+        to_json struct — measurably doubled the element-write CPU for a
+        column nothing in the query surface reads. The schema keeps the
+        column, and explicit ``update_element_value`` overrides still
+        store JSON."""
         if not (
             self.session.provenance_enabled
             and self.elements_enabled
@@ -262,19 +259,12 @@ class ProvDataFrame:
             values = F.array(
                 F.array(*[F.col(c).cast("string") for c in user_cols])
             )
-        if include_json is None:
-            include_json = getattr(self.session, "capture_value_json", False)
-        json_col = (
-            F.to_json(F.struct(*[F.col(c) for c in user_cols]))
-            if include_json
-            else F.lit(None).cast("string")
-        )
         elements = cached.select(
             F.lit(run_id).alias("run_id"),
             F.lit(task_id).alias("task_id"),
             F.col(PROV_ID).alias("element_id"),
             values.alias("values"),
-            json_col.alias("value_json"),
+            F.lit(None).cast("string").alias("value_json"),
         )
         self.session.store.append_elements(elements)
         deps = cached.select(
@@ -392,8 +382,6 @@ class ProvDataFrame:
         other: "ProvDataFrame",
         on=None,
         how: str = "inner",
-        *,
-        broadcast_other: bool = False,
     ) -> "ProvDataFrame":
         """Join. Output element depends on the matching elements of both
         sides (reference rdd/CoGroupedRDD.scala:86-133)."""
@@ -403,8 +391,6 @@ class ProvDataFrame:
             left = self._strip(left)
             right = right.withColumn("_dep_r", _dep_expr(right))
             right = self._strip(right)
-        if broadcast_other:
-            right = F.broadcast(right)
         joined = left.join(right, on=on, how=how)
         if self.elements_enabled:
             deps = F.concat(

@@ -1,8 +1,9 @@
 """Provenance store: parquet tables under one run directory.
 
-Driver-side metadata (executions, tasks, task_deps, transformation_groups,
-filegroup_refs) is buffered in memory and flushed as small parquet files —
-these tables are O(#operators), tiny. Element-level tables (elements,
+Driver-side metadata (executions, tasks, task_deps, transformation_groups)
+is buffered in memory and flushed as small parquet files — these tables
+are O(#operators), tiny. ``filegroup_refs`` are appended eagerly by the
+artifact store's distributed write. Element-level tables (elements,
 element_deps) are written as *distributed* DataFrame appends: at 100 TB the
 element tables dwarf the data, so they must never pass through the driver.
 ``read_arrow`` is the read-only serving path: pyarrow scans of the flushed
@@ -92,7 +93,6 @@ class ProvStore:
             "tasks": [],
             "task_deps": [],
             "transformation_groups": [],
-            "filegroup_refs": [],
         }
         # Deferred distributed appends: each persist_elements() contributes
         # two lazy DataFrames (elements + deps); writing them eagerly costs
@@ -236,14 +236,6 @@ class ProvStore:
                  list(intermediary_tasks), finish_task)
             )
 
-    def write_filegroup_ref(self, run_id, task_id, element_id, folder_path) -> None:
-        if not self.enabled:
-            return
-        with self._lock:
-            self._buffers["filegroup_refs"].append(
-                (run_id, task_id, element_id, folder_path)
-            )
-
     # -- distributed element tables ---------------------------------------
     def append_elements(self, df: DataFrame) -> None:
         """Queue a DataFrame shaped like model.ELEMENTS for the next
@@ -343,8 +335,7 @@ class ProvStore:
 
     def append_filegroup_refs(self, df: DataFrame) -> None:
         """Append a DataFrame shaped like model.FILEGROUP_REFS — the
-        distributed-write path for O(#groups) refs (the driver-side
-        ``write_filegroup_ref`` buffer stays for one-off rows)."""
+        distributed-write path for O(#groups) refs, written eagerly."""
         if not self.enabled:
             return
         df.write.mode("append").parquet(
@@ -573,10 +564,8 @@ class ProvStore:
         :meth:`export_graph` keeps the reference's exact {nodes, links}
         shape for fixture-scale graphs; past that, one JSON in driver
         memory is the bottleneck and this is the export to use."""
-        from pyspark.sql import functions as F
-
-        elements = self.table("elements").where(f"run_id = '{run_id}'")
-        deps = self.table("element_deps").where(f"run_id = '{run_id}'")
+        elements = self.table("elements").where(F.col("run_id") == run_id)
+        deps = self.table("element_deps").where(F.col("run_id") == run_id)
         elements.select(
             F.col("element_id").alias("id"),
             F.col("task_id").alias("task"),
@@ -593,8 +582,8 @@ class ProvStore:
         (reference br/uff/spark/DataflowProvenance.scala:106-132).
         Fixture-scale convenience — use :meth:`export_graph_distributed`
         when the graph exceeds driver memory."""
-        elements = self.table("elements").where(f"run_id = '{run_id}'")
-        deps = self.table("element_deps").where(f"run_id = '{run_id}'")
+        elements = self.table("elements").where(F.col("run_id") == run_id)
+        deps = self.table("element_deps").where(F.col("run_id") == run_id)
         nodes = [
             {"id": r["element_id"], "task": r["task_id"], "values": r["values"]}
             for r in elements.collect()

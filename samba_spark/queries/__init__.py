@@ -17,8 +17,9 @@ harness in tests/test_declared_queries.py, which runs ALL oracle-bearing
 queries regardless of window position.
 
 Round-4 rotation (VERDICT r3 item 1): every round-3 rotated-in entry came
-back green in CORRECTNESS_r03 (45 green + q24/x14 rows-only by design), so
-all 45 moved to ``AUX_QUERIES``; the freed slots now hold 45 of the 67
+back green in the round-3 correctness record (45 green + q24/x14
+rows-only by design; in git history at 92ce187), so all 45 moved to
+``AUX_QUERIES``; the freed slots now hold 45 of the 67
 never-driver-checked round-3 additions, prioritized per the verdict:
 streaming state (q73/q78/q83/q84/q85), codecs (x44/x63/x73/x74), the
 Spark-4 surface (x70/x83–x86, q77/q79–q82), TPC-H completion (q63–q72),
@@ -128,7 +129,8 @@ _SENTINELS = [
 # round-11 additions first (standing new-before-backfill policy — x166
 # session-store compact lifecycle, x167 vector-index shard merge), then
 # 40 oldest-single-green backfills in strict single-green-round order,
-# recomputed from CORRECTNESS_r01-r10 (matches the judge's 73 count):
+# recomputed from the round 1-10 correctness records (in git history at
+# 92ce187; matches the judge's 73 count):
 # x114 (the r5 single, queued since r10), all 23 round-6 singles, and
 # 16 of the 17 round-7 singles (q29/q30/x135 were displaced by the
 # late additions x168/x169/x170 and queue for r12).

@@ -95,8 +95,11 @@ class ProvSession:
     (core/src/main/scala/org/apache/spark/SparkConf.scala:636-657):
 
     - ``provenance``  ↔ ``spark.sciSpark.enableProvenance`` (A1)
-    - ``version_control`` ↔ ``spark.sciSpark.versionControl`` (A2)
     - ``script_dir``  ↔ ``spark.sciSpark.internalScriptDir`` (A3)
+
+    ``spark.sciSpark.versionControl`` (A2) has no toggle: a run versions
+    its outputs by calling ``ArtifactStore.commit`` (or
+    ``GitArtifactBackend``) explicitly.
     """
 
     def __init__(
@@ -105,19 +108,12 @@ class ProvSession:
         *,
         name: str = "samba_run",
         provenance: bool = True,
-        version_control: bool = False,
         prov_dir: Optional[str] = None,
         script_dir: Optional[str] = None,
-        capture_value_json: bool = False,
     ):
         self.spark = spark or get_spark(app_name=name)
         self.name = name
         self.provenance_enabled = provenance
-        # Session-wide default for persist_elements(include_json=...);
-        # off: value_json lands NULL (half the element-write serialization
-        # for a column nothing reads by default).
-        self.capture_value_json = capture_value_json
-        self.version_control_enabled = version_control
         self.script_dir = script_dir
         self.run_id = str(uuid.uuid4())
         self.start_time = time.time()
@@ -231,7 +227,7 @@ class ProvSession:
         return self.groups.scope(group_name)
 
     # -- lifecycle ---------------------------------------------------------
-    def stop(self, stop_spark: bool = False) -> None:
+    def stop(self) -> None:
         if self._stopped:
             return
         self._stopped = True
@@ -240,8 +236,6 @@ class ProvSession:
             self.store.finish_execution(self.run_id, self.end_time)
             self.store.flush()
             self.store.close()  # release the async-flush worker thread
-        if stop_spark:
-            self.spark.stop()
 
     def _atexit(self) -> None:
         try:

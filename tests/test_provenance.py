@@ -211,6 +211,30 @@ def test_export_graph_distributed(engine, sf_smoke, tmp_path, spark):
     assert links.count() == 0  # source elements have no deps
 
 
+def test_export_graph_quoted_run_id_exports_nothing(spark, sf_smoke, tmp_path):
+    """The run id is compared as a value, not spliced into SQL: a quoted
+    id matches no run, and each real id exports only its own run."""
+    from samba_spark.session import ProvSession
+
+    prov_dir = str(tmp_path / "prov_two_runs")
+    run_ids = []
+    for name in ("export_a", "export_b"):
+        ps = ProvSession(spark, name=name, prov_dir=prov_dir)
+        ps.read_parquet(f"{sf_smoke}/region.parquet").with_elements().persist_elements()
+        run_ids.append(ps.run_id)
+        ps.stop()
+    store = ps.store
+    quoted = "x' OR '1'='1"
+    g = store.export_graph(quoted, str(tmp_path / "quoted.json"))
+    assert g == {"nodes": [], "links": []}
+    out = str(tmp_path / "quoted_dist")
+    store.export_graph_distributed(quoted, out)
+    assert spark.read.schema("id string").json(f"{out}/nodes").count() == 0
+    for run_id in run_ids:
+        g = store.export_graph(run_id, str(tmp_path / f"{run_id}.json"))
+        assert len(g["nodes"]) == 5
+
+
 def test_dedup_pipeline_with_element_lineage(engine, spark):
     """Layer A composes with the extension surface: exact dedup (x1's
     digest-groupBy shape) run THROUGH the provenance wrapper — every

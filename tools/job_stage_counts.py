@@ -19,7 +19,7 @@ level down: a hidden second materialization of a round's checkpoint
 shows up as repeated stage subtrees.)
 
 Usage: python tools/job_stage_counts.py [sf_dir] q40_connected_components x124_k_core ...
-Writes one line per query to stdout; redirect into plans/r12/.
+Writes one line per query to stdout; redirect it into a file of your choice.
 """
 
 from __future__ import annotations

@@ -8,17 +8,17 @@ oracle). Run from the repo root:
 
     python tools/parity_sweep.py [sf_dir] [out.json] [--only n1,n2,...]
 
-Defaults: /root/testdata/sf0.01 → PARITY_r05.json
+Defaults: the sf0.01 fixture → parity.json
 
 ``--only`` restricts the sweep to a comma-separated subset — the
 targeted-family use case (VERDICT r7 item 1: the sf0.1 sweep of the
 iterative/fixed-point operators, where small-SF parity hid the k-core
 24-round under-peel).
 
-Per-round CI invocation (VERDICT r3 item 8 — both SFs, committed):
+Both SFs (VERDICT r3 item 8):
 
-    python tools/parity_sweep.py /root/testdata/sf0.001 PARITY_r05_sf0.001.json
-    python tools/parity_sweep.py /root/testdata/sf0.01  PARITY_r05.json
+    python tools/parity_sweep.py <testdata>/sf0.001 parity_sf0.001.json
+    python tools/parity_sweep.py <testdata>/sf0.01  parity.json
 """
 
 from __future__ import annotations
@@ -42,7 +42,7 @@ def main() -> None:
         only = set(argv[i + 1].split(","))
         del argv[i : i + 2]
     sf_dir = argv[0] if len(argv) > 0 else "/root/testdata/sf0.01"
-    out = argv[1] if len(argv) > 1 else "PARITY_r05.json"
+    out = argv[1] if len(argv) > 1 else "parity.json"
 
     from samba_spark.queries import ALL_QUERIES
 

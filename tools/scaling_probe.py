@@ -5,9 +5,10 @@ sf0.001 / sf0.01 / sf0.1 (100× data span) and report the growth ratio per
 already at these sizes (the x60 bucket-degeneration regression showed
 17× per 10× step before its rebuild); healthy plans show ≤10× (linear in
 data) and usually much less while fixed job-scheduling overhead
-dominates. Writes SCALING_r{N}.md. Run from the repo root:
+dominates. Writes a markdown table (default scaling.md). Run from the
+repo root:
 
-    python tools/scaling_probe.py [round_number]
+    python tools/scaling_probe.py [out.md]
 """
 
 from __future__ import annotations
@@ -65,8 +66,8 @@ PROBES = [
     # triples). x117 (HLL approx profile) is deliberately absent: its
     # declared query computes the EXACT profile alongside the sketch for
     # the est_ok gate, so probing the query would time the Expand pass
-    # it exists to avoid — tools/x110_x100_decade_probe.py times
-    # table_profile(exact=False) directly instead.
+    # it exists to avoid; time table_profile(exact=False) directly
+    # instead.
     "x118_sliding_distinct_bitmap",
     # round-6 additions: regime-dispatched sliding distinct (probe +
     # chosen path), Bloom ingest skip-list (bitmap build + broadcast
@@ -84,7 +85,7 @@ PROBES = [
     # pixel work is SF-independent by design), length-bucket batching
     # economics (one hash agg), winnowed common-substring pairs (dense
     # window hashing + winnowing window + df-capped pair join — the new
-    # heavy family; see also tools/x132_decade_probe.py one decade up),
+    # heavy family),
     # Theil-Sen trend (orders scan + month rollup; the pairwise stage is
     # metadata-scale), SQ8 quantized ANN (two embeddings scans: scale
     # calibration + scoring — embeddings scale with SF).
@@ -181,7 +182,7 @@ SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"
 
 
 def main() -> None:
-    rnd = sys.argv[1] if len(sys.argv) > 1 else "03"
+    out = sys.argv[1] if len(sys.argv) > 1 else "scaling.md"
     from samba_spark.queries import ALL_QUERIES
     from samba_spark.session import get_spark
 
@@ -205,8 +206,6 @@ def main() -> None:
             force(ALL_QUERIES[name].fn(spark, sf_dir))
             times.setdefault(name, []).append(time.perf_counter() - t0)
 
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = os.path.join(here, f"SCALING_r{rnd}.md")
     with open(out, "w") as fh:
         fh.write(
             "# SCALING — growth per 10x data step (warm, local[32])\n\n"
