@@ -5,11 +5,13 @@ Designed for 100 TB document sets:
 - exact / normalized dedup: one hash-partitioned groupBy on the dedup key —
   the minimum possible: a single shuffle keyed by the digest, never by the
   full text (digest first, so the shuffle moves 16-byte keys, not documents).
-- MinHash-LSH: shingle → per-shingle hashes from the xxhash64 family
-  (seeded) → minhash signature → band buckets → candidate pairs via a
-  self-join *on bucket keys only*. Quadratic blow-up is confined to each
-  bucket; band/row parameters tune recall vs. bucket size. Skewed buckets
-  (boilerplate shingles) are capped.
+- MinHash-LSH: per-document shingle array → one md5 per shingle and 64
+  linear permutations in one Arrow pass (the default md5 family; a
+  seeded xxhash64 family is the Catalyst-only alternative) → minhash
+  signature → band buckets → candidate pairs via a self-join *on bucket
+  keys only* → clusters by union-find (operators/graph.py). Quadratic
+  blow-up is confined to each bucket; band/row parameters tune recall
+  vs. bucket size. Skewed buckets (boilerplate shingles) are capped.
 - SimHash: 64-bit signature from token-hash bit votes, all Catalyst
   expressions; near-dup = signature XOR popcount ≤ k.
 - n-gram Jaccard: exact similarity on candidate pairs (typically the
@@ -28,6 +30,7 @@ import shutil
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from samba_spark.operators.guards import plan_assert
 from samba_spark.operators.leases import _URI_SCHEME, single_writer
@@ -91,29 +94,20 @@ def dedup_normalized(documents: DataFrame) -> DataFrame:
     )
 
 
-def shingles(
+def _shingle_arrays(
     documents: DataFrame,
-    n: int = 3,
+    n: int,
     carry_cols: tuple[str, ...] = (),
     unique: bool = False,
-) -> DataFrame:
-    """(doc_id, shingle) pairs: word n-grams over normalized tokens.
-    ``carry_cols`` rides extra document columns (e.g. ``source``)
-    through the explode so downstream attribution needs no join back.
+) -> tuple[DataFrame, Column]:
+    """The per-document shingle array: word n-grams over normalized
+    tokens, as a Column over the returned tokenized frame (doc_id,
+    *carry_cols, _toks). A text with fewer than ``n`` tokens gives one
+    shorter shingle; an empty or null text gives the one shingle ``""``.
 
     Tokenization is bound to a column *before* the per-position slice —
     inlining it would make Catalyst re-evaluate the split for every shingle
-    position (O(len²) per document; measured 12× slower).
-
-    ``unique=True`` applies ``array_distinct`` BEFORE the explode: the
-    per-document shingle SET instead of the multiset. For set-semantics
-    consumers (minhash min-aggregation, Jaccard/containment set joins)
-    this is result-identical and strictly cheaper — within-doc repeats
-    never reach the md5/explode/shuffle path, and a downstream
-    row-level ``.distinct()`` (a full exchange of shingle STRINGS)
-    becomes redundant because (doc_id, shingle) rows are already
-    unique. Multiplicity consumers (ngram_novelty's occurrence counts)
-    keep the default."""
+    position (O(len²) per document; measured 12× slower)."""
     toked = documents.select(
         "doc_id",
         *carry_cols,
@@ -127,9 +121,85 @@ def shingles(
     )
     if unique:
         sh = F.array_distinct(sh)
+    return toked, sh
+
+
+def shingles(
+    documents: DataFrame,
+    n: int = 3,
+    carry_cols: tuple[str, ...] = (),
+    unique: bool = False,
+) -> DataFrame:
+    """(doc_id, shingle) pairs: word n-grams over normalized tokens.
+    ``carry_cols`` rides extra document columns (e.g. ``source``)
+    through the explode so downstream attribution needs no join back.
+
+    ``unique=True`` applies ``array_distinct`` BEFORE the explode: the
+    per-document shingle SET instead of the multiset. For set-semantics
+    consumers (Jaccard/containment set joins) this is result-identical
+    and strictly cheaper — within-doc repeats never reach the explode or
+    the shuffle, and a downstream row-level ``.distinct()`` (a full
+    exchange of shingle STRINGS) becomes redundant because (doc_id,
+    shingle) rows are already unique. Multiplicity consumers
+    (ngram_novelty's occurrence counts) keep the default."""
+    toked, sh = _shingle_arrays(documents, n, carry_cols, unique)
     return toked.select(
         "doc_id", *carry_cols, F.explode(sh).alias("shingle")
     )
+
+
+def _md5_minhash(num_hashes: int):
+    """mapInArrow body for the md5 family: (doc_id, shingle array) batches
+    → (doc_id, sig). Built by a factory so cloudpickle ships it by value
+    and Python workers need no samba_spark import."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    a = np.array(MINHASH_A[:num_hashes], dtype=np.int64)
+    b = np.array(MINHASH_B[:num_hashes], dtype=np.int64)
+    p = MINHASH_P
+
+    def sign(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            arrays = batch.column(1)
+            shingle_bytes = arrays.flatten().cast(pa.binary()).to_pylist()
+            # first 4 md5 bytes big-endian == first 8 hex digits
+            base = np.fromiter(
+                (
+                    int.from_bytes(hashlib.md5(s).digest()[:4], "big")
+                    for s in shingle_bytes
+                ),
+                dtype=np.int64,
+                count=len(shingle_bytes),
+            )
+            # every array holds >= 1 shingle, so the starts are strictly
+            # increasing, as reduceat needs
+            lengths = pc.list_value_length(arrays).to_numpy()
+            starts = np.concatenate(([0], np.cumsum(lengths)[:-1]))
+            sig = np.empty((len(batch), len(a)), dtype=np.int64)
+            # one permutation per column keeps the working set at one
+            # int64 per shingle (a shingles × hashes matrix would be 64×
+            # that for a 10k-document batch); A < 2^30, base < 2^32 and
+            # B < 2^30, so A*base + B < 2^63
+            for j in range(len(a)):
+                sig[:, j] = np.minimum.reduceat((a[j] * base + b[j]) % p, starts)
+            offsets = pa.array(
+                np.arange(0, sig.size + 1, len(a), dtype=np.int32)
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0),
+                    pa.ListArray.from_arrays(offsets, pa.array(sig.ravel())),
+                ],
+                names=["doc_id", "sig"],
+            )
+
+    return sign
 
 
 def minhash_signatures(
@@ -138,40 +208,37 @@ def minhash_signatures(
     num_hashes: int = 64,
     hash_family: str = "md5",
 ) -> DataFrame:
-    """(doc_id, sig array<bigint>): minhash over word-shingles — one pass,
-    one groupBy(doc_id) shuffle.
+    """(doc_id, sig array<bigint>): minhash over word-shingles, one row
+    per document (``doc_id`` is a key; its type is kept).
 
-    hash_family="md5" (default): one md5 per shingle + linear permutations,
-    bit-for-bit reproducible in DuckDB (the correctness oracle).
-    hash_family="xxhash64": seeded xxhash64 per (shingle, j) — cheaper per
-    hash, the throughput option when no oracle parity is needed.
+    hash_family="md5" (default): tokens and shingles in Catalyst, then
+    one ``mapInArrow`` pass per partition — one md5 per shingle and the
+    ``num_hashes`` linear permutations in numpy int64 — with no shuffle.
+    Bit-for-bit reproducible in DuckDB (the correctness oracle).
+    hash_family="xxhash64": seeded xxhash64 per (shingle, j), min per
+    document in one groupBy(doc_id) shuffle, all Catalyst — a different
+    signature, for when no oracle parity is needed.
 
-    Shingles are NOT per-doc deduplicated here: min over the multiset
-    equals min over the set, so ``unique=True`` would be
-    result-identical, but the measured within-doc repeat rate is ~0.1%
-    (sf0.1 corpus) — the ``array_distinct`` pass costs more than the
-    few repeated md5s it saves. Set-semantics consumers that would
-    otherwise pay a row-level ``.distinct()`` exchange (Jaccard,
-    containment) DO use ``unique=True``; the trade is different there
-    because a whole Exchange disappears."""
-    sh = shingles(documents, n)
+    Shingles are NOT per-doc deduplicated: min over the multiset equals
+    min over the set, and the measured within-doc repeat rate is ~0.1%
+    (sf0.1 corpus)."""
     if hash_family == "md5":
-        sh = sh.withColumn("_h0", _md5_base32(F.col("shingle")))
-        hash_cols = [
-            F.min(
-                (F.lit(MINHASH_A[i]) * F.col("_h0") + F.lit(MINHASH_B[i]))
-                % F.lit(MINHASH_P)
-            ).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    elif hash_family == "xxhash64":
-        hash_cols = [
+        if num_hashes > len(MINHASH_A):
+            raise ValueError(f"md5 family has {len(MINHASH_A)} permutations")
+        toked, sh = _shingle_arrays(documents, n)
+        arrays = toked.select("doc_id", sh.alias("shingles"))
+        schema = StructType(
+            [arrays.schema["doc_id"], StructField("sig", ArrayType(LongType()))]
+        )
+        return arrays.mapInArrow(_md5_minhash(num_hashes), schema)
+    if hash_family != "xxhash64":
+        raise ValueError(f"unknown hash_family: {hash_family!r}")
+    sig = shingles(documents, n).groupBy("doc_id").agg(
+        *[
             F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
             for i in range(num_hashes)
         ]
-    else:
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
-    sig = sh.groupBy("doc_id").agg(*hash_cols)
+    )
     return sig.select(
         "doc_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
     )
@@ -279,9 +346,8 @@ def lsh_candidate_pairs(
 
 def minhash_lsh_dedup(documents: DataFrame, **kw) -> DataFrame:
     """Fuzzy dedup clusters: candidate pairs → connected components by
-    min-label propagation (operators/graph.py; converges in rounds ≈
-    cluster diameter — near-dup clusters are near-cliques, so 2-3).
-    Returns (doc_id, cluster_id)."""
+    union-find over the collected pair list (operators/graph.py; one job
+    at any cluster diameter). Returns (doc_id, cluster_id)."""
     from samba_spark.operators.graph import connected_components
 
     pairs = lsh_candidate_pairs(documents, **kw)

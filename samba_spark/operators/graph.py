@@ -1,77 +1,68 @@
-"""Iterative graph operators on edge DataFrames — connected components and
+"""Graph operators on edge DataFrames — connected components and
 PageRank, DataFrame-native (no GraphX dependency; the reference tree ships
 stock GraphX it never instruments, so the capability surface here is the
 dataflow one: iterative joins over an edges table).
 
-Scale posture: each iteration is one join + one aggregation on the edge
-table, shuffled by vertex id — the Pregel message pattern expressed as
-DataFrame ops. Edges are localCheckpointed once so every round re-reads a
-materialized plan instead of recomputing upstream lineage. Rounds:
-connected components converges in O(component diameter); PageRank runs a
-fixed iteration count.
+Connected components collect the edge list once and run union-find in
+the driver: one Spark job at any component diameter. The iterative
+operators (PageRank, shortest paths, label propagation, k-core) run each
+round as one join + one aggregation on the edge table, shuffled by
+vertex id — the Pregel message pattern expressed as DataFrame ops — over
+edges localCheckpointed once so every round re-reads a materialized plan
+instead of recomputing upstream lineage.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    max_iterations: int = 25,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """(vertex, component) for every vertex appearing in ``edges``;
     ``component`` is the minimum vertex id reachable (undirected).
 
-    Min-label propagation: each round every vertex adopts the smallest
-    label among its neighbors and itself; converges in rounds ≈ graph
-    diameter. Near-dup clusters (the main use, operators/dedup.py) are
-    near-cliques, so 2-3 rounds in practice. Each round is one shuffle on
-    vertex id; the per-row ``_changed`` flag makes the convergence check a
-    filter on the already-checkpointed result — no extra pass."""
-    sym = edges.select(
-        F.col(src).alias("doc_a"), F.col(dst).alias("doc_b")
-    ).unionByName(
-        edges.select(F.col(dst).alias("doc_a"), F.col(src).alias("doc_b"))
+    One Spark job collects the edge list into the driver, which must hold
+    it; union-find there keeps each set's minimum vertex as its root, so
+    the job count does not grow with component diameter. A null endpoint
+    is not a vertex: an edge with one null end adds only its other end
+    (as its own component unless another edge joins it). Vertex ids may
+    be of any orderable type (ints, strings); the result has the common
+    type of ``src`` and ``dst``, one row per vertex, sorted by vertex."""
+    ends = edges.select(F.col(src).alias("vertex")).unionByName(
+        edges.select(F.col(dst).alias("vertex"))
     )
-    sym = sym.localCheckpoint()  # materialize once; every round re-reads it
-    labels = (
-        sym.select(F.col("doc_a").alias("vertex"))
-        .distinct()
-        .withColumn("component", F.col("vertex"))
+    vtype = ends.schema["vertex"].dataType
+    table = edges.select(F.col(src).cast(vtype), F.col(dst).cast(vtype)).toArrow()
+    parent: dict = {}
+
+    def find(v):
+        root = v
+        while parent[root] != root:
+            root = parent[root]
+        while parent[v] != root:  # path compression
+            parent[v], v = root, parent[v]
+        return root
+
+    for a, b in zip(table.column(0).to_pylist(), table.column(1).to_pylist()):
+        for v in (a, b):
+            if v is not None and v not in parent:
+                parent[v] = v
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    vertices = sorted(parent)
+    schema = StructType(
+        [StructField("vertex", vtype), StructField("component", vtype)]
     )
-    for _ in range(max_iterations):
-        prop = (
-            sym.join(labels, sym.doc_b == labels.vertex)
-            .groupBy("doc_a")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(prop, labels.vertex == prop.doc_a, "left")
-            .select(
-                "vertex",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("nbr_min", F.col("component")),
-                ).alias("component"),
-                (
-                    F.coalesce("nbr_min", F.col("component"))
-                    < F.col("component")
-                ).alias("_changed"),
-            )
-            # lazy cut: the isEmpty probe below is the materializing
-            # action (plus a partition backfill inside the same round)
-            # instead of a separate full checkpoint job per round
-            .localCheckpoint(eager=False)
-        )
-        converged = new_labels.where(F.col("_changed")).isEmpty()
-        labels = new_labels.drop("_changed")
-        if converged:
-            break
-    return labels
+    result = pa.table(
+        {"vertex": vertices, "component": [find(v) for v in vertices]}
+    )
+    return edges.sparkSession.createDataFrame(result, schema)
 
 
 def pagerank(

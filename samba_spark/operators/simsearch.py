@@ -379,13 +379,13 @@ def semantic_prune(
 
     Pipeline: sign-LSH-bucketed cosine pairs (embedding_neardup_pairs —
     never all-pairs), connected components over the pair graph
-    (operators.graph — near-dup clusters are near-cliques, so min-label
-    propagation converges in 2-3 rounds), min-id representative per
-    component, anti-join survivors back onto the corpus.
+    (operators.graph — union-find over the collected pair list, one
+    job), min-id representative per component, anti-join survivors back
+    onto the corpus.
 
     100 TB posture: candidate scoring is bucket-local (recall knob =
-    num_planes); the CC rounds shuffle only the PAIR graph (≪ corpus);
-    the final joins are id-keyed equi-joins. Deterministic end to end
+    num_planes); components collect only the PAIR graph (≪ corpus) into
+    the driver; the final joins are id-keyed equi-joins. Deterministic end to end
     (seeded planes, min-id representative) — DuckDB-oracle-able, unlike
     centroid-trained SemDeDup variants.
     """

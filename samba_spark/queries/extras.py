@@ -697,10 +697,10 @@ GROUP BY k.source ORDER BY k.source
 
 
 # Q40 connected components over an edge DataFrame (operators/graph.py) —
-# min-label propagation; the oracle resolves the same components with a
-# recursive transitive closure. Edge set: the nation "path graph" per
-# region (consecutive nation keys within a region), diameter 4, so the
-# loop takes several propagation rounds.
+# union-find over the collected edge list; the oracle resolves the same
+# components with a recursive transitive closure. Edge set: the nation
+# "path graph" per region (consecutive nation keys within a region),
+# diameter 4.
 def q40_connected_components(spark, sf_dir):
     from pyspark.sql import Window
 

@@ -292,3 +292,38 @@ def test_modularity_partitioning_independent(spark, sf_smoke):
     a = modularity_contributions(pairs, comm).collect()
     b = modularity_contributions(pairs.repartition(13), comm).collect()
     assert a == b
+
+
+def test_connected_components_long_path_is_one_component(spark):
+    # diameter 39: past any fixed number of label-propagation rounds
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 40)], "src long, dst long"
+    )
+    got = {
+        r.vertex: r.component for r in connected_components(edges).collect()
+    }
+    assert got == {v: 1 for v in range(1, 41)}
+
+
+def test_connected_components_null_endpoint_is_not_a_vertex(spark):
+    edges = spark.createDataFrame(
+        [(1, None), (None, 2), (3, 4), (None, None), (4, None)],
+        "src int, dst int",
+    )
+    rows = connected_components(edges).collect()
+    assert {(r.vertex, r.component) for r in rows} == {
+        (1, 1), (2, 2), (3, 3), (4, 3)
+    }
+
+
+def test_connected_components_string_vertices(spark):
+    edges = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("y", "x"), ("z", None)],
+        "src string, dst string",
+    )
+    cc = connected_components(edges)
+    assert cc.schema.simpleString() == "struct<vertex:string,component:string>"
+    assert {(r.vertex, r.component) for r in cc.collect()} == {
+        ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"),
+        ("z", "z"),
+    }

@@ -53,7 +53,7 @@ _CORE = {
     "q32_stream_sessions": "streaming session windows with watermark",
     "q35_stream_sliding": "streaming sliding-window aggregates",
     "q39_training_pipeline": "corpus-prep chain: lang-ID -> quality gate -> dedup -> rollup",
-    "q40_connected_components": "connected components via iterative min-label joins",
+    "q40_connected_components": "connected components via union-find over the collected edges",
     "q41_pagerank": "PageRank power iteration with dangling-mass redistribution",
     "q43_stream_join": "stream-stream interval join, watermark-bounded state",
     "q44_stream_dedup": "streaming deduplication within the watermark horizon",
