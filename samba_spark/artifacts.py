@@ -8,10 +8,14 @@ and push; a driver-side service merges branches.
 Ours is Spark-native and infrastructure-free: a content-addressed blob
 directory (sha256, two-level fan-out — the same dedup a git object store
 gives) plus a per-run parquet *manifest* (the "commit"). Blobs are written
-executor-side straight from the DataFrame — no driver round-trip, no git
-server; identical content across versions is stored once. ``filegroup_refs``
-rows land in the provenance store so lineage queries can resolve an element
-to its artifact folder (reference fileGroupReference CQL table).
+executor-side straight from the DataFrame by :func:`put_blob` — no driver
+round-trip, no git server; identical content across versions is stored
+once. ``put_blob`` is the engine's one blob writer: FileGroup and media
+column spills (``spill_contents``, ``multimodal.spill_binary_column``) use
+it too. ``filegroup_refs`` rows are queued on the provenance store's
+deferred writer so lineage queries can resolve an element to its artifact
+folder (reference fileGroupReference CQL table). ``file_tree`` reads a
+run's manifests with pyarrow, with no Spark job.
 
 At 100 TB the blob root would be an object store (S3/HDFS) path; the layout
 and manifest schema are unchanged.
@@ -19,7 +23,9 @@ and manifest schema are unchanged.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import uuid
 from typing import Iterable, Optional
 
 import pandas as pd
@@ -42,6 +48,25 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("sha256", T.StringType()),
     ]
 )
+
+
+def put_blob(blob_dir: str, content: bytes) -> tuple[str, str]:
+    """Store ``content`` under its sha256 in ``blob_dir`` (two-level
+    fan-out) and return ``(sha, path)``; equal content is stored once.
+    Each writer uses a temp name of its own, so two workers landing the
+    same sha never interleave into one file, and ``os.replace`` publishes
+    it whole (content is identical for an equal sha, so last-wins is
+    safe)."""
+    sha = hashlib.sha256(content).hexdigest()
+    sub = os.path.join(blob_dir, sha[:2])
+    path = os.path.join(sub, sha)
+    if not os.path.exists(path):
+        os.makedirs(sub, exist_ok=True)
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "wb") as fh:
+            fh.write(content)
+        os.replace(tmp, path)
+    return sha, path
 
 
 class ArtifactStore:
@@ -72,27 +97,11 @@ class ArtifactStore:
         )
 
         def _write(batches: Iterable[pd.DataFrame]):
-            import hashlib
-            import uuid
-
             for batch in batches:
                 out = []
                 for _, row in batch.iterrows():
                     f = row["f"]
-                    content = resolve_file_content(f)
-                    sha = hashlib.sha256(content).hexdigest()
-                    sub = os.path.join(blob_dir, sha[:2])
-                    os.makedirs(sub, exist_ok=True)
-                    path = os.path.join(sub, sha)
-                    if not os.path.exists(path):
-                        # per-writer unique temp name: two workers landing
-                        # the same sha must not interleave into one file;
-                        # os.replace then publishes atomically (content is
-                        # identical for equal sha, so last-wins is safe)
-                        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-                        with open(tmp, "wb") as fh:
-                            fh.write(content)
-                        os.replace(tmp, path)
+                    sha, _ = put_blob(blob_dir, resolve_file_content(f))
                     out.append(
                         {
                             "group_name": row["group_name"],
@@ -115,8 +124,8 @@ class ArtifactStore:
         # An explicit schema: inferring it would start a footer-reading job.
         written = session.spark.read.schema(MANIFEST_SCHEMA).parquet(run_dir)
         # provenance link: element → artifact folder (fileGroupReference).
-        # Distributed append straight from the manifest — no driver collect
-        # loop; at millions of groups this is one small shuffle + write.
+        # A plan over the manifest just written, queued on the store's
+        # deferred writer like the element tables: no foreground job here.
         refs = written.select("group_name", "element_id").distinct().select(
             F.lit(run_id).alias("run_id"),
             F.lit(pdf.task_id).alias("task_id"),
@@ -132,9 +141,21 @@ class ArtifactStore:
         with open(self.blob_path(sha), "rb") as fh:
             return fh.read()
 
-    def file_tree(self, spark, run_id: str) -> DataFrame:
+    def file_tree(self, run_id: str):
         """File-tree listing for a run (reference web API
-        DataElementAPICtrl.kt:235-314 resolves trees via JGit TreeWalk)."""
-        run_dir = os.path.join(self.root, "runs", run_id, "*")
-        df = spark.read.schema(MANIFEST_SCHEMA).parquet(run_dir)
-        return df.select("group_name", "file_name", "size", "modified", "sha256")
+        DataElementAPICtrl.kt:235-314 resolves trees via JGit TreeWalk):
+        the run's manifests read with pyarrow as one Table, with no Spark
+        job. A run with no commit raises FileNotFoundError."""
+        import pyarrow.dataset as ds
+
+        from samba_spark.prov.store import _arrow_schema
+
+        run_dir = os.path.join(self.root, "runs", run_id)
+        if not os.path.isdir(run_dir):
+            raise FileNotFoundError(f"no manifest for run {run_id}")
+        dataset = ds.dataset(
+            run_dir, schema=_arrow_schema(MANIFEST_SCHEMA), format="parquet"
+        )
+        return dataset.to_table(
+            columns=["group_name", "file_name", "size", "modified", "sha256"]
+        )

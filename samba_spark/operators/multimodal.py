@@ -1489,8 +1489,11 @@ def spill_binary_column(
     a 100 TB image/audio table. ``hydrate_binary_column`` is the
     inverse. ``blob_root`` must be reachable from every executor (shared
     FS locally, object store at cluster scale); writes are
-    content-addressed and atomic, so duplicates store once."""
+    content-addressed and atomic (``artifacts.put_blob``), so duplicates
+    store once."""
     import os as _os
+
+    from samba_spark.artifacts import put_blob
 
     blob_dir = _os.path.join(blob_root, "blobs")
     _os.makedirs(blob_dir, exist_ok=True)
@@ -1508,10 +1511,6 @@ def spill_binary_column(
     )
 
     def _spill(batches):
-        import hashlib
-        import os
-        import uuid
-
         for batch in batches:
             recs = []
             for content in batch[col]:
@@ -1522,15 +1521,7 @@ def spill_binary_column(
                 if len(content) < threshold:
                     recs.append({"content": content, "content_ref": None})
                     continue
-                sha = hashlib.sha256(content).hexdigest()
-                sub = os.path.join(blob_dir, sha[:2])
-                os.makedirs(sub, exist_ok=True)
-                path = os.path.join(sub, sha)
-                if not os.path.exists(path):
-                    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-                    with open(tmp, "wb") as fh:
-                        fh.write(content)
-                    os.replace(tmp, path)
+                _, path = put_blob(blob_dir, content)
                 recs.append({"content": None, "content_ref": path})
             batch = batch.copy()
             batch[col] = recs

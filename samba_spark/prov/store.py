@@ -2,9 +2,9 @@
 
 Driver-side metadata (executions, tasks, task_deps, transformation_groups)
 is buffered in memory and flushed as small parquet files — these tables
-are O(#operators), tiny. ``filegroup_refs`` are appended eagerly by the
-artifact store's distributed write. Element-level tables (elements,
-element_deps) are written as *distributed* DataFrame appends: at 100 TB the
+are O(#operators), tiny. The element-level tables (elements, element_deps)
+and the artifact store's ``filegroup_refs`` are *distributed* DataFrame
+appends, queued as plans and written by one deferred writer: at 100 TB the
 element tables dwarf the data, so they must never pass through the driver.
 ``read_arrow`` is the read-only serving path: pyarrow scans of the flushed
 files, with no Spark job and no flush.
@@ -95,17 +95,20 @@ class ProvStore:
             "transformation_groups": [],
         }
         # Deferred distributed appends: each persist_elements() contributes
-        # two lazy DataFrames (elements + deps); writing them eagerly costs
-        # one Spark write job each (~0.3-0.5 s of scheduling + parquet
-        # commit overhead PER STAGE). Instead the plans are buffered and
-        # union-written in ONE job per table at flush — the batch analogue
-        # of the reference's fire-and-forget async inserts
-        # (CassandraDBDao.scala:39-57): visibility is deferred, capture is
-        # not. Safe because persist_elements caches its source first, so
-        # the buffered plan re-reads the cache, not the input.
+        # two lazy DataFrames (elements + deps), each ArtifactStore.commit
+        # one (filegroup_refs, over the manifest it has just written);
+        # writing them eagerly costs one Spark write job each (~0.3-0.5 s
+        # of scheduling + parquet commit overhead PER STAGE). Instead the
+        # plans are buffered and union-written in ONE job per table at
+        # flush — the batch analogue of the reference's fire-and-forget
+        # async inserts (CassandraDBDao.scala:39-57): visibility is
+        # deferred, capture is not. Safe because persist_elements caches its source first, so
+        # the buffered plan re-reads the cache, not the input, and the refs
+        # plan reads manifest files listed when it was built.
         self._pending_dfs: dict[str, list[DataFrame]] = {
             "elements": [],
             "element_deps": [],
+            "filegroup_refs": [],
         }
         # Async flush worker: persist_elements() schedules the deferred
         # element/dep writes here so they OVERLAP the caller's foreground
@@ -237,22 +240,22 @@ class ProvStore:
             )
 
     # -- distributed element tables ---------------------------------------
+    def _queue(self, name: str, df: DataFrame) -> None:
+        if not self.enabled:
+            return
+        with self._lock:
+            self._pending_dfs[name].append(df)
+
     def append_elements(self, df: DataFrame) -> None:
         """Queue a DataFrame shaped like model.ELEMENTS for the next
         distributed batch write (see ``_pending_dfs`` in __init__)."""
-        if not self.enabled:
-            return
-        with self._lock:
-            self._pending_dfs["elements"].append(df)
+        self._queue("elements", df)
 
     def append_element_deps(self, df: DataFrame) -> None:
-        if not self.enabled:
-            return
-        with self._lock:
-            self._pending_dfs["element_deps"].append(df)
+        self._queue("element_deps", df)
 
     def schedule_flush(self) -> None:
-        """Kick the deferred element/dep writes off on the background
+        """Kick the deferred table writes off on the background
         worker so they overlap the caller's next foreground action. The
         single worker serializes whole-batch flushes (append jobs to one
         directory never run concurrently); flush() joins all scheduled
@@ -291,7 +294,7 @@ class ProvStore:
             pool.shutdown(wait=True)
 
     def _flush_pending_dfs(self) -> None:
-        """Write all queued element/dep plans — one unioned Spark write job
+        """Write all queued plans — one unioned Spark write job
         per table instead of one per persist_elements call. The per-table
         jobs target independent directories, so they are submitted
         CONCURRENTLY (Spark schedules jobs from separate threads in
@@ -334,13 +337,11 @@ class ProvStore:
                     list(pool.map(_write, batches.items()))
 
     def append_filegroup_refs(self, df: DataFrame) -> None:
-        """Append a DataFrame shaped like model.FILEGROUP_REFS — the
-        distributed-write path for O(#groups) refs, written eagerly."""
-        if not self.enabled:
-            return
-        df.write.mode("append").parquet(
-            os.path.join(self.prov_dir, "filegroup_refs")
-        )
+        """Queue a DataFrame shaped like model.FILEGROUP_REFS — O(#groups)
+        refs — and start its write on the background worker, as
+        persist_elements does for the element tables."""
+        self._queue("filegroup_refs", df)
+        self.schedule_flush()
 
     # -- element mutation (A17 parity) --------------------------------------
     # The reference DAO exposes update-element-value and delete-element

@@ -12,8 +12,9 @@ server's memory, as the reference's Spring controllers do
 (DataElementAPICtrl.kt:42-179). Transitive walks run the in-memory BFS of
 ``prov.queries.lineage_walk``. A request starts no Spark job, never
 flushes the store's write buffers and keeps no cache, so it sees exactly
-what has been flushed. The file-tree and download routes still read the
-ArtifactStore manifest through Spark.
+what has been flushed. The file-tree and download routes read the
+ArtifactStore manifests with pyarrow the same way (``ArtifactStore.
+file_tree``), so no route starts a Spark job.
 
 Pure stdlib (http.server + json): no web framework is required, matching
 the survey's "optional thin HTTP" scoping. ``ProvWebAPI.handle`` is a pure
@@ -47,8 +48,6 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Optional
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import functions as F
-
 from samba_spark.operators.wrapper import DROP_SENTINEL_PREFIX
 from samba_spark.prov import queries as Q
 
@@ -59,10 +58,6 @@ _PALETTE = [
     "#4e79a7", "#f28e2b", "#e15759", "#76b7b2", "#59a14f",
     "#edc948", "#b07aa1", "#ff9da7", "#9c755f", "#bab0ac",
 ]
-
-
-def _rows(df) -> list[dict]:
-    return [r.asDict(recursive=True) for r in df.collect()]
 
 
 # User-supplied identifiers that reach the FILESYSTEM (blob paths, run-dir
@@ -166,10 +161,9 @@ class ProvWebAPI:
                     )
         except HTTPError as e:
             return e.status, "application/json", {"error": str(e)}
-        except Exception as e:  # noqa: BLE001 — HTTP boundary: any query/
-            # Spark error must become a 500 response, not a dropped
-            # connection out of do_GET (e.g. AnalysisException from a
-            # file-tree read of an unknown run).
+        except Exception as e:  # noqa: BLE001 — HTTP boundary: any read
+            # or query error must become a 500 response, not a dropped
+            # connection out of do_GET.
             return (
                 500,
                 "application/json",
@@ -311,8 +305,8 @@ class ProvWebAPI:
             raise HTTPError(503, "no ArtifactStore attached")
         _safe_run_id(run_id)
         try:
-            rows = _rows(self.artifacts.file_tree(self.store.spark, run_id))
-        except Exception as e:  # unknown run → empty glob → AnalysisException
+            rows = self.artifacts.file_tree(run_id).to_pylist()
+        except FileNotFoundError as e:
             raise HTTPError(404, f"no artifacts for run {run_id}: {e}")
         groups: dict[str, list[dict]] = {}
         for r in sorted(rows, key=lambda r: (r["group_name"], r["file_name"])):
@@ -349,19 +343,16 @@ class ProvWebAPI:
                 raise HTTPError(400, "need sha256 or group+file")
             _safe_run_id(run_id)
             try:
-                rows = _rows(
-                    self.artifacts.file_tree(self.store.spark, run_id)
-                    .where(
-                        (F.col("group_name") == group)
-                        & (F.col("file_name") == file_name)
-                    )
-                    .limit(1)
-                )
-            except Exception as e:  # unknown run → AnalysisException
+                rows = self.artifacts.file_tree(run_id).to_pylist()
+            except FileNotFoundError as e:
                 raise HTTPError(404, f"no artifacts for run {run_id}: {e}")
-            if not rows:
+            sha256 = next(
+                (r["sha256"] for r in rows
+                 if r["group_name"] == group and r["file_name"] == file_name),
+                None,
+            )
+            if sha256 is None:
                 raise HTTPError(404, f"{group}/{file_name} not in run {run_id}")
-            sha256 = rows[0]["sha256"]
         try:
             return self.artifacts.read_blob(sha256)
         except FileNotFoundError:

@@ -98,45 +98,59 @@ class FileGroupTemplate:
 
 
 def read_file_groups(session, templates, name: Optional[str] = None):
-    """A4: one FileGroup row per template, unioned. Each template's files are
-    read with the distributed binaryFile source and collected into the
-    group's ``files`` array (small per-group file sets by construction —
-    the reference materializes them all in executor memory too)."""
+    """A4: one FileGroup row per template. All templates' files are read
+    with the distributed binaryFile source and collected into each group's
+    ``files`` array by one group-by (small per-group file sets by
+    construction — the reference materializes them in executor memory
+    too). Its one shuffle, ``repartitionById`` on the template index, puts
+    template i in partition i mod min(#templates, defaultParallelism): jobs
+    per read stay flat in the template count, and up to that many groups
+    get a partition each, so their black-box stages run in parallel (a
+    range exchange packs groups with few files together; a plain group-by
+    lets AQE coalesce them into one partition). Groups are keyed by
+    (template index, name): two templates with one name stay two groups.
+    """
+    from functools import reduce
+
     from samba_spark.operators.wrapper import ProvDataFrame
 
+    templates = list(templates)
+    if not templates:
+        raise ValueError("read_file_groups needs at least one template")
     spark: SparkSession = session.spark
-    parts: list[DataFrame] = []
-    for t in templates:
-        raw = spark.read.format("binaryFile").load(t.paths)
-        if t.extra_info:
-            kvs = [x for k, v in sorted(t.extra_info.items()) for x in (F.lit(k), F.lit(v))]
-            extra = F.create_map(*kvs)
-        else:
-            extra = F.expr("map()").cast("map<string,string>")
-        per_file = raw.select(
-            F.lit(t.resolved_name).alias("group_name"),
-            extra.alias("extra_info"),
-            F.struct(
-                F.col("path").alias("path"),
-                F.element_at(F.split(F.col("path"), "/"), -1).alias("name"),
-                F.col("length").alias("size"),
-                F.lit(False).alias("modified"),
-                F.col("content").alias("content"),
-                F.lit(None).cast("string").alias("content_ref"),
-            ).alias("file"),
+    scans: list[DataFrame] = []
+    for i, t in enumerate(templates):
+        kvs = [F.lit(x) for kv in sorted(t.extra_info.items()) for x in kv]
+        extra = F.create_map(*kvs).cast("map<string,string>")
+        scans.append(
+            spark.read.format("binaryFile").load(t.paths).select(
+                F.lit(i).alias("_template"),
+                F.lit(t.resolved_name).alias("group_name"),
+                extra.alias("extra_info"),
+                F.struct(
+                    F.col("path").alias("path"),
+                    F.element_at(F.split(F.col("path"), "/"), -1).alias("name"),
+                    F.col("length").alias("size"),
+                    F.lit(False).alias("modified"),
+                    F.col("content").alias("content"),
+                    F.lit(None).cast("string").alias("content_ref"),
+                ).alias("file"),
+            )
         )
-        grouped = per_file.groupBy("group_name").agg(
+    n = min(len(templates), spark.sparkContext.defaultParallelism)
+    df = (
+        reduce(DataFrame.unionByName, scans)
+        .repartitionById(n, "_template")
+        .groupBy("_template", "group_name")
+        .agg(
             F.first("extra_info").alias("extra_info"),
             F.array_sort(F.collect_list("file")).alias("files"),
         )
-        parts.append(grouped)
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    pdf = ProvDataFrame._source(
-        session, df, op="fileGroup", desc=name or f"fileGroup[{len(list(templates))}]"
+        .drop("_template")
     )
-    return pdf
+    return ProvDataFrame._source(
+        session, df, op="fileGroup", desc=name or f"fileGroup[{len(templates)}]"
+    )
 
 
 def resolve_file_content(f) -> bytes:
@@ -166,11 +180,38 @@ def _file_as_dict(f) -> dict:
     return out
 
 
+def _map_files(pdf, fn: Callable[[dict], dict], desc: str):
+    """Rewrite every file of every group with ``fn(file dict) -> file
+    dict`` in one ``mapInPandas`` pass. A value-preserving physical
+    rewrite: provenance ids and deps pass through unchanged."""
+    from samba_spark.operators.wrapper import ProvDataFrame
+
+    src = pdf.raw
+
+    def _rewrite(batches):
+        for batch in batches:
+            batch = batch.copy()
+            batch["files"] = [
+                [fn(_file_as_dict(f)) for f in files] for files in batch["files"]
+            ]
+            yield batch
+
+    return ProvDataFrame(
+        pdf.session,
+        src.mapInPandas(_rewrite, src.schema),
+        op="map",
+        desc=desc,
+        parents=[pdf],
+        elements_enabled=pdf.elements_enabled,
+    )
+
+
 def spill_contents(pdf, blob_root: str, threshold: int = 1 << 20):
-    """Move file contents ≥ ``threshold`` bytes out of the DataFrame into a
-    content-addressed blob directory (sha256, two-level fan-out — the same
-    layout as the ArtifactStore), leaving ``content = NULL`` and
-    ``content_ref = <blob path>`` in the row.
+    """Move file contents ≥ ``threshold`` bytes out of the DataFrame into
+    the content-addressed blob directory ``<blob_root>/blobs`` (written by
+    :func:`samba_spark.artifacts.put_blob`, the ArtifactStore's writer),
+    leaving ``content = NULL`` and ``content_ref = <blob path>`` in the
+    row.
 
     This is the 100 TB contract for FileGroups (SURVEY.md §4.2 hard spot
     (c)): a shuffle or Arrow batch must never carry multi-GB payloads
@@ -180,58 +221,22 @@ def spill_contents(pdf, blob_root: str, threshold: int = 1 << 20):
     :func:`resolve_file_content`. ``blob_root`` must be storage every
     executor can reach — a shared filesystem locally, an object-store
     mount at cluster scale (same requirement the artifact store already
-    has). Writes are executor-side, content-addressed and atomic
-    (tmp + rename), so duplicate content across groups stores once and
-    concurrent writers of equal blobs are safe. Lineage: a value-preserving
-    physical rewrite — provenance ids/deps pass through unchanged."""
-    import pandas as pd
+    has). Writes are executor-side, content-addressed and atomic, so
+    duplicate content across groups stores once and concurrent writers of
+    equal blobs are safe."""
+    from samba_spark.artifacts import put_blob
 
-    from samba_spark.operators.wrapper import ProvDataFrame
-
-    src = pdf.raw
-    schema = src.schema
     blob_dir = os.path.join(blob_root, "blobs")
     os.makedirs(blob_dir, exist_ok=True)
 
-    def _spill(batches):
-        import hashlib
-        import uuid
+    def _spill(d):
+        content = d["content"]
+        if content is not None and len(content) >= threshold:
+            _, d["content_ref"] = put_blob(blob_dir, bytes(content))
+            d["content"] = None
+        return d
 
-        for batch in batches:
-            new_files_col = []
-            for files in batch["files"]:
-                out = []
-                for f in list(files):
-                    d = _file_as_dict(f)
-                    content = d["content"]
-                    if content is not None and len(content) >= threshold:
-                        content = bytes(content)
-                        sha = hashlib.sha256(content).hexdigest()
-                        sub = os.path.join(blob_dir, sha[:2])
-                        os.makedirs(sub, exist_ok=True)
-                        path = os.path.join(sub, sha)
-                        if not os.path.exists(path):
-                            tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-                            with open(tmp, "wb") as fh:
-                                fh.write(content)
-                            os.replace(tmp, path)
-                        d["content"] = None
-                        d["content_ref"] = path
-                    out.append(d)
-                new_files_col.append(out)
-            batch = batch.copy()
-            batch["files"] = new_files_col
-            yield batch
-
-    out = src.mapInPandas(_spill, schema)
-    return ProvDataFrame(
-        pdf.session,
-        out,
-        op="map",
-        desc=f"spillContents(>={threshold}B)",
-        parents=[pdf],
-        elements_enabled=pdf.elements_enabled,
-    )
+    return _map_files(pdf, _spill, f"spillContents(>={threshold}B)")
 
 
 def hydrate_contents(pdf):
@@ -239,33 +244,11 @@ def hydrate_contents(pdf):
     into inline ``content`` bytes (e.g. before handing groups to a consumer
     outside the engine). Executor-side reads; refs must be reachable from
     every executor."""
-    from samba_spark.operators.wrapper import ProvDataFrame
 
-    src = pdf.raw
-    schema = src.schema
+    def _hydrate(d):
+        if d["content"] is None and d["content_ref"]:
+            d["content"] = resolve_file_content(d)
+            d["content_ref"] = None
+        return d
 
-    def _hydrate(batches):
-        for batch in batches:
-            new_files_col = []
-            for files in batch["files"]:
-                out = []
-                for f in list(files):
-                    d = _file_as_dict(f)
-                    if d["content"] is None and d["content_ref"]:
-                        d["content"] = resolve_file_content(d)
-                        d["content_ref"] = None
-                    out.append(d)
-                new_files_col.append(out)
-            batch = batch.copy()
-            batch["files"] = new_files_col
-            yield batch
-
-    out = src.mapInPandas(_hydrate, schema)
-    return ProvDataFrame(
-        pdf.session,
-        out,
-        op="map",
-        desc="hydrateContents",
-        parents=[pdf],
-        elements_enabled=pdf.elements_enabled,
-    )
+    return _map_files(pdf, _hydrate, "hydrateContents")

@@ -236,8 +236,9 @@ def _first_element(web, run_id, task_id):
 
 
 def test_lineage_routes_start_no_spark_job(api, spark):
-    """Every lineage route is served without a Spark job, counted from the
-    status tracker under one job group per route."""
+    """Every lineage route, and the file-tree and download routes that read
+    the ArtifactStore manifests, is served without a Spark job, counted
+    from the status tracker under one job group per route."""
     web, engine, kept = api
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -254,7 +255,14 @@ def test_lineage_routes_start_no_spark_job(api, spark):
     # the probe sees a job when there is one
     assert jobs_of(lambda: spark.range(3).count())[1]
     element = _first_element(web, engine.run_id, kept.task_id)
-    for path, params in _lineage_routes(engine.run_id, kept.task_id, element):
+    artifact_routes = [
+        (f"/api/dataelement/repositoryFileTree/{engine.run_id}", {}),
+        ("/api/dataelement/download",
+         {"executionID": engine.run_id, "group": "g1", "file": "input.txt"}),
+    ]
+    for path, params in (
+        _lineage_routes(engine.run_id, kept.task_id, element) + artifact_routes
+    ):
         (status, _), jobs = jobs_of(lambda: _get(web, path, **params))
         assert status == 200 and jobs == [], (path, params, status, jobs)
 
