@@ -1,11 +1,20 @@
 """Provenance store: parquet tables under one run directory.
 
-Driver-side metadata (executions, tasks, task_deps, transformation_groups)
-is buffered in memory and flushed as small parquet files — these tables
-are O(#operators), tiny. The element-level tables (elements, element_deps)
-and the artifact store's ``filegroup_refs`` are *distributed* DataFrame
-appends, queued as plans and written by one deferred writer: at 100 TB the
-element tables dwarf the data, so they must never pass through the driver.
+Each kind of table has one write rule.
+
+- Driver-side metadata (executions, tasks, task_deps,
+  transformation_groups) is O(#operators). The store keeps every row it
+  was given in memory for its whole life, and each flush rewrites one
+  file per (table, run), ``<table>/<run_id>.parquet``, whole. So a
+  later end time, rename (A12), ignore (A11) or schema change (A10)
+  replaces the row on disk, as the reference's in-place Cassandra
+  updates do (DataflowProvenance.scala:29-37, 95-103), and a run has
+  exactly one ``executions`` row.
+- The element-level tables (elements, element_deps) and the artifact
+  store's ``filegroup_refs`` are *distributed* DataFrame appends, queued
+  as plans and drained by one background thread: at 100 TB the element
+  tables dwarf the data, so they must never pass through the driver.
+
 ``read_arrow`` is the read-only serving path: pyarrow scans of the flushed
 files, with no Spark job and no flush.
 
@@ -16,10 +25,13 @@ columnar batches per partition instead.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import re
 import threading
 import time
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 from typing import Iterable, Optional
 
@@ -28,6 +40,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from samba_spark.prov import model
+
+# A run id names files (``<table>/<run_id>.parquet``) and, in the web API,
+# manifest globs, so it must be a plain file-name token: no dot, slash or
+# glob character can traverse or widen a path. Session run ids are uuid4
+# strings. \Z, not $: Python's $ also matches before a trailing newline.
+_RUN_ID_RE = re.compile(r"\A[A-Za-z0-9][A-Za-z0-9_-]{0,127}\Z")
 
 
 def _arrow_schema(spark_schema: T.StructType):
@@ -53,14 +71,13 @@ def _arrow_schema(spark_schema: T.StructType):
     )
 
 
-def _write_rows_parquet(dir_path: str, rows: list[tuple], spark_schema) -> None:
-    """Write driver-side buffered rows as one parquet file WITHOUT a Spark
-    job. A 1-row createDataFrame(...).coalesce(1).write costs ~5 s in local
-    mode (32 Python partitions funneled through one task, one Python-worker
+def _write_rows_parquet(path: str, rows: list[tuple], spark_schema) -> None:
+    """Write driver-side rows as the parquet file ``path`` WITHOUT a Spark
+    job, replacing any file already there. A 1-row
+    createDataFrame(...).coalesce(1).write costs ~5 s in local mode (32
+    Python partitions funneled through one task, one Python-worker
     round-trip each); pyarrow does it in milliseconds, and Spark reads the
     file back with the same explicit schema."""
-    import uuid
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -68,15 +85,15 @@ def _write_rows_parquet(dir_path: str, rows: list[tuple], spark_schema) -> None:
     cols = list(zip(*rows)) if rows else [[] for _ in schema]
     arrays = [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)]
     table = pa.Table.from_arrays(arrays, schema=schema)
+    dir_path, name = os.path.split(path)
     os.makedirs(dir_path, exist_ok=True)
-    # Readers do not wait for a flush, so the file appears whole or not at
-    # all: it is written under a dot-prefixed name (Spark, pyarrow and the
-    # ``*.parquet`` globs all skip it) and renamed into place.
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(dir_path, f".{name}.tmp")
+    # Readers do not wait for a flush, so they see the old file or the new
+    # one, whole: it is written under a dot-prefixed name (Spark, pyarrow
+    # and the ``*.parquet`` globs all skip it) and renamed into place.
+    tmp = os.path.join(dir_path, f".{name}.{uuid.uuid4().hex}.tmp")
     try:
         pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(dir_path, name))
+        os.replace(tmp, path)
     finally:
         if os.path.exists(tmp):  # only when the write or rename failed
             os.remove(tmp)
@@ -88,89 +105,76 @@ class ProvStore:
         self.prov_dir = prov_dir
         self.enabled = enabled
         self._lock = threading.Lock()
+        # Every metadata row this store was given, kept past flush: a
+        # flush rewrites each changed (table, run) file from these rows.
         self._buffers: dict[str, list[tuple]] = {
             "executions": [],
             "tasks": [],
             "task_deps": [],
             "transformation_groups": [],
         }
-        # Deferred distributed appends: each persist_elements() contributes
-        # two lazy DataFrames (elements + deps), each ArtifactStore.commit
-        # one (filegroup_refs, over the manifest it has just written);
-        # writing them eagerly costs one Spark write job each (~0.3-0.5 s
-        # of scheduling + parquet commit overhead PER STAGE). Instead the
-        # plans are buffered and union-written in ONE job per table at
-        # flush — the batch analogue of the reference's fire-and-forget
+        self._dirty: set[tuple[str, str]] = set()  # (table, run_id)
+        # Deferred distributed appends: each persist_elements() queues two
+        # lazy DataFrames (elements + deps), each ArtifactStore.commit one
+        # (filegroup_refs), and then calls schedule_flush(), so the writes
+        # run on the flush worker during the caller's next foreground
+        # action — the batch analogue of the reference's fire-and-forget
         # async inserts (CassandraDBDao.scala:39-57): visibility is
-        # deferred, capture is not. Safe because persist_elements caches its source first, so
-        # the buffered plan re-reads the cache, not the input, and the refs
-        # plan reads manifest files listed when it was built.
+        # deferred, capture is not. Safe because persist_elements caches
+        # its source first, and the refs plan reads manifest files listed
+        # when it was built.
         self._pending_dfs: dict[str, list[DataFrame]] = {
             "elements": [],
             "element_deps": [],
             "filegroup_refs": [],
         }
-        # Async flush worker: persist_elements() schedules the deferred
-        # element/dep writes here so they OVERLAP the caller's foreground
-        # action instead of adding two fixed write-job latencies after it
-        # (the §6 ≤2× element-capture budget is dominated by exactly those
-        # latencies on short pipelines). Single worker: scheduled flushes
-        # serialize, so two append jobs never target the same parquet
-        # directory concurrently (a shared _temporary staging dir would
-        # race); WITHIN one flush the two tables still write concurrently
-        # (independent directories). flush() joins outstanding work before
-        # its own synchronous drain, so read-your-writes semantics and the
-        # flush-inclusive overhead timer are unchanged.
+        # The one thread that drains _pending_dfs. A single worker
+        # serializes the drains, so two append jobs never target the same
+        # parquet directory concurrently (a shared _temporary staging dir
+        # would race); flush() queues a drain and joins the worker, so
+        # reads through table() still see every append.
         self._flush_pool: "ThreadPoolExecutor | None" = None
         self._flush_futures: list = []
-        # Serializes whole-batch drains across ALL threads — the worker
-        # pool only serializes drains submitted to it, but flush()/table()
-        # also drain synchronously, and two HTTP-handler threads joining
-        # disjoint future snapshots could otherwise drain concurrently and
-        # race two append jobs on one directory's _temporary staging dir.
-        self._drain_mutex = threading.Lock()
-        # run_id → (name, start_time) for executions whose OPEN row may
-        # already have been flushed; lets finish_execution append a
-        # completed row instead of silently dropping the end_time
-        self._open_execs: dict[str, tuple] = {}
         if enabled:
             os.makedirs(prov_dir, exist_ok=True)
 
     # -- driver-side metadata ---------------------------------------------
+    def _add(self, table: str, rows: Iterable[tuple]) -> None:
+        """Buffer metadata rows (run_id first) and mark their files for
+        the next flush. Caller holds the lock."""
+        for row in rows:
+            if not _RUN_ID_RE.match(row[0]):
+                raise ValueError(f"run_id must be a plain file-name token: {row[0]!r}")
+            self._buffers[table].append(row)
+            self._dirty.add((table, row[0]))
+
+    def _replace(self, table: str, run_id: str, update) -> None:
+        """Pass each buffered row of ``run_id`` through ``update(row)``,
+        which returns the new row, or None to drop it; mark the file for
+        the next flush if anything changed. Caller holds the lock."""
+        rows, changed = [], False
+        for r in self._buffers[table]:
+            if r[0] == run_id:
+                new = update(r)
+                changed |= new != r
+                r = new
+            if r is not None:
+                rows.append(r)
+        self._buffers[table] = rows
+        if changed:
+            self._dirty.add((table, run_id))
+
     def write_execution(self, run_id: str, name: str, start_time: float) -> None:
         if not self.enabled:
             return
         with self._lock:
-            self._buffers["executions"].append((run_id, name, start_time, None))
-            # remembered past flush so finish_execution can still record
-            # the end_time after the open row left the buffer (see below)
-            self._open_execs[run_id] = (name, start_time)
+            self._add("executions", [(run_id, name, start_time, None)])
 
     def finish_execution(self, run_id: str, end_time: float) -> None:
         if not self.enabled:
             return
         with self._lock:
-            rows = self._buffers["executions"]
-            for i, r in enumerate(rows):
-                if r[0] == run_id:
-                    rows[i] = (r[0], r[1], r[2], end_time)
-                    self._open_execs.pop(run_id, None)
-                    return
-            # The open row was already flushed to parquet (any mid-run
-            # flush() — including the implicit one every table() read
-            # performs — used to make the later stop()'s end_time update
-            # a silent no-op: the row left the buffer with end_time NULL
-            # and nothing ever completed it). Append a COMPLETED row for
-            # the same run instead; table("executions") dedupes per
-            # run_id preferring the completed row, so DAO readers see
-            # exactly one row per run. NOTE: readers that bypass the DAO
-            # and scan the parquet directory raw (q75's oracle must —
-            # DuckDB has no DAO) will see BOTH rows for a mid-run-flushed
-            # run and must dedupe per run_id themselves; a run with the
-            # normal open→stop lifecycle still writes exactly one row.
-            meta = self._open_execs.pop(run_id, None)
-            if meta is not None:
-                rows.append((run_id, meta[0], meta[1], end_time))
+            self._replace("executions", run_id, lambda r: r[:3] + (end_time,))
 
     def write_task(
         self,
@@ -181,41 +185,34 @@ class ProvStore:
         schema_fields: Optional[list[str]],
         dep_task_ids: Iterable[str],
         group_id: Optional[str] = None,
-        ignored: bool = False,
     ) -> None:
+        """Buffer a task and its dep edges. Its ``ignored`` column is
+        always False: an ignored task is removed (:meth:`remove_task`)."""
         if not self.enabled:
             return
         with self._lock:
-            self._buffers["tasks"].append(
+            self._add("tasks", [
                 (run_id, task_id, transformation_type, description,
-                 list(schema_fields or []), group_id, bool(ignored))
-            )
-            for dep in dep_task_ids:
-                self._buffers["task_deps"].append((run_id, task_id, dep))
+                 list(schema_fields or []), group_id, False)
+            ])
+            self._add("task_deps", [(run_id, task_id, dep) for dep in dep_task_ids])
 
     def remove_task(self, run_id: str, task_id: str) -> None:
-        """A11 ignore: drop the task row + its dep edges from the buffers
+        """A11 ignore: drop the task row + its dep edges
         (reference: ignored tasks are never persisted, RDD.scala:238-241)."""
         if not self.enabled:
             return
         with self._lock:
-            self._buffers["tasks"] = [
-                r for r in self._buffers["tasks"]
-                if not (r[0] == run_id and r[1] == task_id)
-            ]
-            self._buffers["task_deps"] = [
-                r for r in self._buffers["task_deps"]
-                if not (r[0] == run_id and r[1] == task_id)
-            ]
+            for table in ("tasks", "task_deps"):
+                self._replace(table, run_id,
+                              lambda r: None if r[1] == task_id else r)
 
     def rename_task(self, run_id: str, task_id: str, name: str) -> None:
         if not self.enabled:
             return
         with self._lock:
-            rows = self._buffers["tasks"]
-            for i, r in enumerate(rows):
-                if r[0] == run_id and r[1] == task_id:
-                    rows[i] = (r[0], r[1], r[2], name, r[4], r[5], r[6])
+            self._replace("tasks", run_id, lambda r: (
+                r[:3] + (name,) + r[4:] if r[1] == task_id else r))
 
     def update_task_schema(
         self, run_id: str, task_id: str, schema_fields: Optional[list[str]]
@@ -223,10 +220,8 @@ class ProvStore:
         if not self.enabled:
             return
         with self._lock:
-            rows = self._buffers["tasks"]
-            for i, r in enumerate(rows):
-                if r[0] == run_id and r[1] == task_id:
-                    rows[i] = (r[0], r[1], r[2], r[3], schema_fields, r[5], r[6])
+            self._replace("tasks", run_id, lambda r: (
+                r[:4] + (schema_fields,) + r[5:] if r[1] == task_id else r))
 
     def write_group(
         self, run_id, group_id, name, init_tasks, intermediary_tasks, finish_task
@@ -234,10 +229,10 @@ class ProvStore:
         if not self.enabled:
             return
         with self._lock:
-            self._buffers["transformation_groups"].append(
+            self._add("transformation_groups", [
                 (run_id, group_id, name, list(init_tasks),
                  list(intermediary_tasks), finish_task)
-            )
+            ])
 
     # -- distributed element tables ---------------------------------------
     def _queue(self, name: str, df: DataFrame) -> None:
@@ -255,12 +250,11 @@ class ProvStore:
         self._queue("element_deps", df)
 
     def schedule_flush(self) -> None:
-        """Kick the deferred table writes off on the background
-        worker so they overlap the caller's next foreground action. The
-        single worker serializes whole-batch flushes (append jobs to one
-        directory never run concurrently); flush() joins all scheduled
-        work, so nothing changes for readers — only WHEN the write jobs
-        run (during the foreground action, not after it)."""
+        """Queue a drain of the deferred table writes on the flush worker,
+        so they overlap the caller's next foreground action. The single
+        worker serializes the drains (append jobs to one directory never
+        run concurrently); flush() joins them, so nothing changes for
+        readers — only WHEN the write jobs run."""
         if not self.enabled:
             return
         with self._lock:
@@ -275,18 +269,27 @@ class ProvStore:
             )
 
     def _join_scheduled_flushes(self) -> None:
+        """Wait for every queued drain, then raise the first failure: a
+        failed drain must not let the caller return while later drains
+        still write. A drain leaves the list only once it is over, so a
+        second thread that joins meanwhile waits for it too."""
         with self._lock:
-            futures, self._flush_futures = self._flush_futures, []
-        for f in futures:
-            f.result()  # propagate any write failure to the caller
+            futures = list(self._flush_futures)
+        errors = [f.exception() for f in futures]  # waits for each
+        with self._lock:
+            done = set(futures)
+            self._flush_futures = [f for f in self._flush_futures if f not in done]
+        first = next((e for e in errors if e is not None), None)
+        if first is not None:
+            raise first
 
     def close(self) -> None:
         """Release the async-flush worker thread. Called by
         ProvSession.stop() after the final flush — a store that ever
         scheduled a flush would otherwise leak one idle thread (and its
         references) per session for the process lifetime. Idempotent;
-        a closed store can still flush synchronously (schedule_flush
-        lazily re-creates the pool if the store is reused)."""
+        a closed store can still flush (schedule_flush lazily re-creates
+        the pool if the store is reused)."""
         self._join_scheduled_flushes()
         with self._lock:
             pool, self._flush_pool = self._flush_pool, None
@@ -294,47 +297,31 @@ class ProvStore:
             pool.shutdown(wait=True)
 
     def _flush_pending_dfs(self) -> None:
-        """Write all queued plans — one unioned Spark write job
-        per table instead of one per persist_elements call. The per-table
-        jobs target independent directories, so they are submitted
-        CONCURRENTLY (Spark schedules jobs from separate threads in
-        parallel): flush wall-clock is max(tables), not sum — at small
-        data the jobs are latency-bound, at scale they overlap I/O.
-        Provenance parquet uses snappy: capture sits on the query's
-        critical path, so cheap-CPU compression beats zstd's ratio here
-        (snappy, not lz4 — DuckDB reads snappy parquet, and the q53/q59
-        oracles read the prov store directly)."""
-        from concurrent.futures import ThreadPoolExecutor
+        """Flush-worker body: write all queued plans, one unioned Spark
+        write job per table. The per-table jobs target independent
+        directories, so they are submitted CONCURRENTLY (Spark schedules
+        jobs from separate threads in parallel): drain wall-clock is
+        max(tables), not sum — at small data the jobs are latency-bound,
+        at scale they overlap I/O. Provenance parquet uses snappy: capture
+        sits on the query's critical path, so cheap-CPU compression beats
+        zstd's ratio here (snappy, not lz4 — DuckDB reads snappy parquet,
+        and the q53/q59 oracles read the prov store directly)."""
         from functools import reduce
 
-        with self._drain_mutex:
-            with self._lock:
-                batches = {
-                    name: dfs[:]
-                    for name, dfs in self._pending_dfs.items()
-                    if dfs
-                }
-                for name in batches:
-                    self._pending_dfs[name].clear()
-            if not batches:
-                return
+        with self._lock:
+            batches = {
+                name: dfs[:] for name, dfs in self._pending_dfs.items() if dfs
+            }
+            for name in batches:
+                self._pending_dfs[name].clear()
 
-            def _write(item):
-                name, dfs = item
-                out = (
-                    dfs[0]
-                    if len(dfs) == 1
-                    else reduce(lambda a, b: a.unionByName(b), dfs)
-                )
-                out.write.mode("append").option(
-                    "compression", "snappy"
-                ).parquet(os.path.join(self.prov_dir, name))
+        def _write(name, dfs):
+            reduce(DataFrame.unionByName, dfs).write.mode("append").option(
+                "compression", "snappy"
+            ).parquet(os.path.join(self.prov_dir, name))
 
-            if len(batches) == 1:
-                _write(next(iter(batches.items())))
-            else:
-                with ThreadPoolExecutor(max_workers=len(batches)) as pool:
-                    list(pool.map(_write, batches.items()))
+        with ThreadPoolExecutor(max_workers=max(1, len(batches))) as pool:
+            list(pool.map(_write, batches, batches.values()))
 
     def append_filegroup_refs(self, df: DataFrame) -> None:
         """Queue a DataFrame shaped like model.FILEGROUP_REFS — O(#groups)
@@ -353,7 +340,8 @@ class ProvStore:
             list(model.ELEMENTS.fields) + [T.StructField("seq", T.LongType(), False)]
         )
         _write_rows_parquet(
-            os.path.join(self.prov_dir, "element_overrides"),
+            os.path.join(self.prov_dir, "element_overrides",
+                         f"part-{uuid.uuid4().hex}.parquet"),
             [(run_id, task_id, element_id, values, value_json, time.time_ns())],
             schema,
         )
@@ -412,32 +400,38 @@ class ProvStore:
         )
 
     # -- flush / read ------------------------------------------------------
+    def _run_file(self, table: str, run_id: str) -> str:
+        return os.path.join(self.prov_dir, table, f"{run_id}.parquet")
+
     def flush(self) -> None:
+        """Rewrite the metadata file of every changed (table, run), then
+        drain the queued element writes on the flush worker and wait."""
         if not self.enabled:
             return
-        self._join_scheduled_flushes()
         with self._lock:
-            for name, rows in self._buffers.items():
-                if not rows:
-                    continue
+            for table, run_id in sorted(self._dirty):
+                rows = [r for r in self._buffers[table] if r[0] == run_id]
                 _write_rows_parquet(
-                    os.path.join(self.prov_dir, name), rows, model.TABLES[name]
+                    self._run_file(table, run_id), rows, model.TABLES[table]
                 )
-                rows.clear()
-        self._flush_pending_dfs()
+                self._dirty.discard((table, run_id))
+        self.schedule_flush()
+        self._join_scheduled_flushes()
 
     def vacuum(
         self,
         keep_latest: "int | None" = None,
         keep_run_ids=None,
     ) -> dict:
-        """Run-level retention: rewrite every provenance table keeping only
-        rows of the retained runs, and drop the rest. Retain either the
-        ``keep_latest`` most recent executions (by start_time, run_id
-        tiebreak) or an explicit ``keep_run_ids`` iterable.
+        """Run-level retention: keep only the rows of the retained runs, and
+        drop the rest. Retain either the ``keep_latest`` most recent
+        executions (by start_time, run_id tiebreak) or an explicit
+        ``keep_run_ids`` iterable.
 
-        The store is append-only parquet with runs interleaved across
-        files, so retention is a rewrite, not a file delete: each table is
+        A dropped run's metadata files (``<table>/<run_id>.parquet``) are
+        deleted, and its rows leave this store's memory so no later flush
+        writes them back. The element tables hold runs interleaved across
+        append files, so for them retention is a rewrite: each table is
         filtered and written to ``<table>.vacuum.tmp``, then swapped in
         (same two-rename discipline and stale-dir cleanup as
         plans/layout.compact_dataset — not atomic on a plain filesystem;
@@ -476,8 +470,18 @@ class ProvStore:
         if not dropped:
             return {"kept_runs": keep, "dropped_runs": []}
 
-        table_names = list(model.TABLES) + ["element_overrides"]
-        for name in table_names:
+        gone = set(dropped)
+        with self._lock:
+            for table in self._buffers:
+                self._buffers[table] = [
+                    r for r in self._buffers[table] if r[0] not in gone
+                ]
+                for run_id in dropped:
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(self._run_file(table, run_id))
+            self._dirty = {k for k in self._dirty if k[1] not in gone}
+        for name in ("elements", "element_deps", "filegroup_refs",
+                     "element_overrides"):
             path = os.path.join(self.prov_dir, name)
             if not os.path.isdir(path):
                 continue
@@ -493,37 +497,13 @@ class ProvStore:
         return {"kept_runs": keep, "dropped_runs": dropped}
 
     def table(self, name: str) -> DataFrame:
-        """Read a provenance table (flushing pending driver-side rows and
-        queued element batches first, so reads always see every append)."""
-        if name in self._buffers:
-            self.flush()
-        if name in self._pending_dfs:
-            # join any flush scheduled on the background worker first —
-            # read-your-writes must hold whether the batch is still
-            # queued here or already in flight on the async path
-            self._join_scheduled_flushes()
-            if self._pending_dfs[name]:
-                self._flush_pending_dfs()
+        """Read a provenance table, flushing first, so reads always see
+        every write made through this store."""
+        self.flush()
         path = os.path.join(self.prov_dir, name)
         if not os.path.exists(path):
             return self.spark.createDataFrame([], schema=model.TABLES[name])
-        df = self.spark.read.schema(model.TABLES[name]).parquet(path)
-        if name == "executions":
-            # one row per run: a run whose open (end_time NULL) row was
-            # flushed mid-run gets a second, COMPLETED row at stop()
-            # (finish_execution above) — prefer it. No-op for the normal
-            # single-row-per-run lifecycle.
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("run_id").orderBy(
-                F.col("end_time").desc_nulls_last()
-            )
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        return df
+        return self.spark.read.schema(model.TABLES[name]).parquet(path)
 
     def read_arrow(self, name: str, columns=None, **where):
         """Read-only view of a provenance table as a pyarrow Table, read
@@ -531,8 +511,7 @@ class ProvStore:
         sees what has been flushed and nothing buffered. ``columns``
         projects; each ``where`` item is pushed down as ``column == value``
         (``isin`` for a list, set or tuple). A table with no directory yet
-        reads as empty. ``executions`` keeps :meth:`table`'s rule: one row
-        per run, the completed row winning over an open one."""
+        reads as empty."""
         import pyarrow as pa
         import pyarrow.dataset as ds
 
@@ -548,15 +527,7 @@ class ProvStore:
                 e = ds.field(col) == val
             flt = e if flt is None else flt & e
         dataset = ds.dataset(path, schema=schema, format="parquet")
-        if name != "executions":
-            return dataset.to_table(columns=columns, filter=flt)
-        # completed rows sort first (nulls last), then the first row per run
-        t = dataset.to_table(filter=flt).sort_by([("end_time", "descending")])
-        first = {}
-        for i, run_id in enumerate(t["run_id"].to_pylist()):
-            first.setdefault(run_id, i)
-        keep = pa.array(list(first.values()), pa.int64())
-        return t.take(keep).select(columns or schema.names)
+        return dataset.to_table(columns=columns, filter=flt)
 
     def export_graph_distributed(self, run_id: str, out_dir: str) -> None:
         """A16 at scale: stream the element graph as JSON-lines directories

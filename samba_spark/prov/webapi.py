@@ -50,6 +50,7 @@ from urllib.parse import parse_qs, urlparse
 
 from samba_spark.operators.wrapper import DROP_SENTINEL_PREFIX
 from samba_spark.prov import queries as Q
+from samba_spark.prov.store import _RUN_ID_RE
 
 # Task-node color legend, one color per transformation type — the web UI
 # renders the element graph with a per-task color key
@@ -67,9 +68,9 @@ _PALETTE = [
 # uuid4 strings (artifacts.py:120) but any dot-free [A-Za-z0-9_-] token
 # that can't traverse or glob is accepted.
 # \Z, not $: Python's $ also matches before a trailing newline, so a
-# %0A-terminated token would pass a $-anchored check.
+# %0A-terminated token would pass a $-anchored check. The run-id rule is
+# the store's own: it names each run's metadata files.
 _SHA256_RE = re.compile(r"\A[0-9a-f]{64}\Z")
-_RUN_ID_RE = re.compile(r"\A[A-Za-z0-9][A-Za-z0-9_-]{0,127}\Z")
 
 
 def _safe_sha256(sha: str) -> str:

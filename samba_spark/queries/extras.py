@@ -68,7 +68,9 @@ def seed_q24_oracle_dir() -> None:
         for t in tables:
             d = os.path.join(prov_dir, t)
             if not (os.path.isdir(d) and os.listdir(d)):
-                _write_rows_parquet(d, [], model.TABLES[t])
+                _write_rows_parquet(
+                    os.path.join(d, "seed.parquet"), [], model.TABLES[t]
+                )
 
     # x53: parquet_file_metadata()/parquet_metadata() need >=1 parquet
     # file under the glob; schema is irrelevant (metadata functions have

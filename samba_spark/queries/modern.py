@@ -376,7 +376,9 @@ def q75_run_diff(spark, sf_dir):
     executions into one prov store, then diff their operator-type counts
     straight off the tasks ⋈ executions tables. The oracle reads the same
     parquet store, so the hash match proves the store's written content,
-    not just the Spark-side arithmetic."""
+    not just the Spark-side arithmetic. Both sides join executions raw:
+    the store writes exactly one executions row per run, however often
+    it flushes."""
     import shutil
 
     from samba_spark.session import ProvSession
@@ -401,21 +403,11 @@ def q75_run_diff(spark, sf_dir):
     v2.stop()
 
     tasks = spark.read.parquet(f"{Q75_PROV_DIR}/tasks")
-    # one row per run, preferring the completed (non-null end_time) row:
-    # this query reads the parquet store raw (the oracle must see the
-    # same bytes), which bypasses ProvStore.table()'s per-run dedup — a
-    # mid-run flush writes an open row AND a completed row for the same
-    # run_id, and without this both engines would double-count every
-    # task identically, keeping parity green while the numbers are
-    # wrong (ADVICE r9). The oracle applies the same QUALIFY.
-    from pyspark.sql import Window as _W
-
-    _w75 = _W.partitionBy("run_id").orderBy(F.col("end_time").desc_nulls_last())
-    execs = (
-        spark.read.parquet(f"{Q75_PROV_DIR}/executions")
-        .withColumn("_rn", F.row_number().over(_w75))
-        .where(F.col("_rn") == 1)
-        .select("run_id", F.col("name").alias("run_name"))
+    # read raw, like the oracle: ProvStore rewrites a run's executions
+    # file whole on every flush, so each run has one row and the join
+    # counts each task once
+    execs = spark.read.parquet(f"{Q75_PROV_DIR}/executions").select(
+        "run_id", F.col("name").alias("run_name")
     )
     per = (
         tasks.join(execs, "run_id")
@@ -443,9 +435,7 @@ WITH t AS (
   FROM read_parquet('{Q75_PROV_DIR}/tasks/*.parquet')),
 e AS (
   SELECT run_id, name
-  FROM read_parquet('{Q75_PROV_DIR}/executions/*.parquet')
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY run_id
-                             ORDER BY (end_time IS NULL), end_time DESC) = 1)
+  FROM read_parquet('{Q75_PROV_DIR}/executions/*.parquet'))
 SELECT transformation_type,
        SUM(CASE WHEN name = 'v1' THEN 1 ELSE 0 END)::BIGINT AS n_v1,
        SUM(CASE WHEN name = 'v2' THEN 1 ELSE 0 END)::BIGINT AS n_v2,

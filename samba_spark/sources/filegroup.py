@@ -97,6 +97,25 @@ class FileGroupTemplate:
         return ",".join(sorted(os.path.basename(p) for p in self.paths))
 
 
+def _file_row(i, t: FileGroupTemplate, path, name, size, content):
+    """The columns ``read_file_groups`` unions for one file of template
+    ``i``: its group key, extra info and file struct."""
+    kvs = [F.lit(x) for kv in sorted(t.extra_info.items()) for x in kv]
+    return (
+        F.lit(i).alias("_template"),
+        F.lit(t.resolved_name).alias("group_name"),
+        F.create_map(*kvs).cast("map<string,string>").alias("extra_info"),
+        F.struct(
+            path.alias("path"),
+            name.alias("name"),
+            size.cast("long").alias("size"),
+            F.lit(False).alias("modified"),
+            content.alias("content"),
+            F.lit(None).cast("string").alias("content_ref"),
+        ).alias("file"),
+    )
+
+
 def read_file_groups(session, templates, name: Optional[str] = None):
     """A4: one FileGroup row per template. All templates' files are read
     with the distributed binaryFile source and collected into each group's
@@ -109,6 +128,10 @@ def read_file_groups(session, templates, name: Optional[str] = None):
     range exchange packs groups with few files together; a plain group-by
     lets AQE coalesce them into one partition). Groups are keyed by
     (template index, name): two templates with one name stay two groups.
+    Spark's binaryFile scan makes no split for a zero-byte file, so the
+    template's zero-byte files join the union as driver-built rows (size
+    0, content ``b""``), and a template of only empty files still yields
+    its group, as the reference's FileGroup does.
     """
     from functools import reduce
 
@@ -119,24 +142,22 @@ def read_file_groups(session, templates, name: Optional[str] = None):
         raise ValueError("read_file_groups needs at least one template")
     spark: SparkSession = session.spark
     scans: list[DataFrame] = []
+    empty_rows = []
     for i, t in enumerate(templates):
-        kvs = [F.lit(x) for kv in sorted(t.extra_info.items()) for x in kv]
-        extra = F.create_map(*kvs).cast("map<string,string>")
-        scans.append(
-            spark.read.format("binaryFile").load(t.paths).select(
-                F.lit(i).alias("_template"),
-                F.lit(t.resolved_name).alias("group_name"),
-                extra.alias("extra_info"),
-                F.struct(
-                    F.col("path").alias("path"),
-                    F.element_at(F.split(F.col("path"), "/"), -1).alias("name"),
-                    F.col("length").alias("size"),
-                    F.lit(False).alias("modified"),
-                    F.col("content").alias("content"),
-                    F.lit(None).cast("string").alias("content_ref"),
-                ).alias("file"),
-            )
-        )
+        scan = spark.read.format("binaryFile").load(t.paths)
+        scans.append(scan.select(*_file_row(
+            i, t, F.col("path"), F.element_at(F.split(F.col("path"), "/"), -1),
+            F.col("length"), F.col("content"),
+        )))
+        empty_rows += [
+            F.struct(*_file_row(i, t, F.lit("file:" + os.path.abspath(p)),
+                                F.lit(os.path.basename(p)), F.lit(0),
+                                F.lit(bytearray())))
+            for p in t.paths
+            if os.path.isfile(p) and os.path.getsize(p) == 0
+        ]
+    if empty_rows:  # literal rows in one partition: no Python worker, no job
+        scans.append(spark.range(0, 1, 1, 1).select(F.inline(F.array(*empty_rows))))
     n = min(len(templates), spark.sparkContext.defaultParallelism)
     df = (
         reduce(DataFrame.unionByName, scans)

@@ -108,6 +108,41 @@ def test_per_template_parity(engine, files):
             assert bytes(f.content) == Path(f.path.removeprefix("file:")).read_bytes()
 
 
+def test_zero_byte_files_stay_in_their_groups(engine, spark, files, tmp_path):
+    """Spark's binaryFile scan makes no split for an empty file; the read
+    still lists it with size 0 and empty content, a template of only empty
+    files still yields its group, and the read starts as many jobs as one
+    without empty files."""
+    d = tmp_path / "empty"
+    d.mkdir()
+    empty, only = d / "empty.txt", d / "only_empty.txt"
+    empty.touch()
+    only.touch()
+    one, two = files(1)[0], files(2)[0]
+    ts = [
+        FileGroupTemplate.of_files([str(empty), one], name="mixed", K="v"),
+        FileGroupTemplate.of_file(str(only), name="only_empty"),
+    ]
+    rows, jobs = _jobs(spark, lambda: engine.file_groups(*ts).raw.collect())
+    got = {
+        r.group_name: (r.extra_info, [
+            (f.path, f.name, f.size, bytes(f.content)) for f in r.files
+        ])
+        for r in rows
+    }
+    assert got == {
+        "mixed": ({"K": "v"}, [
+            (f"file:{empty}", "empty.txt", 0, b""),
+            (f"file:{one}", "f01.txt", 7, b"file 1\n"),
+        ]),
+        "only_empty": ({}, [(f"file:{only}", "only_empty.txt", 0, b"")]),
+    }
+    plain = [FileGroupTemplate.of_file(one, name="a"),
+             FileGroupTemplate.of_file(two, name="b")]
+    _, plain_jobs = _jobs(spark, lambda: engine.file_groups(*plain).raw.collect())
+    assert len(jobs) == len(plain_jobs)
+
+
 def test_no_templates_is_a_value_error(engine):
     with pytest.raises(ValueError, match="at least one template"):
         read_file_groups(engine, [])

@@ -4,6 +4,8 @@ Pipeline: scan → filter → join → groupBy-agg on sf0.001 with element
 provenance on. Invariants mirror the reference's capture semantics
 (SURVEY.md §2.1)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -410,7 +412,7 @@ def test_end_time_survives_midrun_flush(spark, sf_smoke, tmp_path):
     executions row left the buffer with end_time NULL and nothing ever
     completed it (found by the round-9 /verify pass — bench.py's
     prov-overhead probe flushes before stop on every run). The store now
-    appends a completed row and table("executions") dedupes per run."""
+    keeps the run's row in memory and rewrites its file at every flush."""
     from samba_spark.session import ProvSession
 
     ps = ProvSession(spark, name="midflush", prov_dir=str(tmp_path / "p"))
@@ -435,7 +437,9 @@ def test_failed_metadata_write_leaves_no_visible_part(tmp_path, monkeypatch):
     from samba_spark.prov.store import _write_rows_parquet
 
     d = tmp_path / "executions"
-    _write_rows_parquet(str(d), [("r0", "ok", 1.0, None)], model.EXECUTIONS)
+    _write_rows_parquet(
+        str(d / "part-r0.parquet"), [("r0", "ok", 1.0, None)], model.EXECUTIONS
+    )
     written = sorted(p.name for p in d.iterdir())
     assert len(written) == 1 and written[0].startswith("part-")
 
@@ -446,7 +450,9 @@ def test_failed_metadata_write_leaves_no_visible_part(tmp_path, monkeypatch):
 
     monkeypatch.setattr(pq, "write_table", torn_write)
     with pytest.raises(OSError):
-        _write_rows_parquet(str(d), [("r1", "torn", 2.0, None)], model.EXECUTIONS)
+        _write_rows_parquet(
+            str(d / "part-r1.parquet"), [("r1", "torn", 2.0, None)], model.EXECUTIONS
+        )
     assert sorted(p.name for p in d.iterdir()) == written
 
 
@@ -462,3 +468,153 @@ def test_sql_records_name_as_description(engine):
     desc = {r["task_id"]: r["description"] for r in tasks}
     assert desc[named.task_id] == "x"
     assert desc[unnamed.task_id] == "SELECT 2 AS two"
+
+
+def _disk(prov_dir, table):
+    import pyarrow.parquet as pq
+
+    return pq.read_table(os.path.join(prov_dir, table)).to_pylist()
+
+
+def test_task_edits_after_flush_reach_disk(spark, sf_smoke, tmp_path):
+    """set_name (A12), ignore_it (A11) and set_schema (A10) made after a
+    mid-run flush() replace the flushed task rows on disk."""
+    from samba_spark.session import ProvSession
+
+    prov_dir = str(tmp_path / "p")
+    ps = ProvSession(spark, name="edits", prov_dir=prov_dir)
+    src = ps.read_parquet(f"{sf_smoke}/nation.parquet", "nation")
+    sel = src.select("n_nationkey", "n_name")
+    flt = sel.where(F.col("n_nationkey") >= 5)
+    ps.store.flush()
+    sel.set_name("renamed-after-flush")
+    flt.ignore_it()
+    src.set_schema(lambda df: F.array(F.array(F.col("n_name"))))
+    ps.stop()
+
+    tasks = {r["task_id"]: r for r in _disk(prov_dir, "tasks")}
+    assert set(tasks) == {src.task_id, sel.task_id}
+    assert tasks[sel.task_id]["description"] == "renamed-after-flush"
+    assert tasks[src.task_id]["schema_fields"] is None
+    assert tasks[sel.task_id]["schema_fields"] == ["n_nationkey", "n_name"]
+    deps = _disk(prov_dir, "task_deps")
+    assert [(d["task_id"], d["dep_task_id"]) for d in deps] == [
+        (sel.task_id, src.task_id)
+    ]
+
+
+def test_metadata_one_file_per_run_after_three_flushes(spark, sf_smoke, tmp_path):
+    """However often a run flushes, each metadata table holds one file for
+    it, and executions one row."""
+    from samba_spark.session import ProvSession
+
+    prov_dir = str(tmp_path / "p")
+    ps = ProvSession(spark, name="three", prov_dir=prov_dir)
+    df = ps.read_parquet(f"{sf_smoke}/region.parquet", "region")
+    for i in range(3):
+        with ps.group(f"g{i}"):
+            df = df.select("r_regionkey", "r_name").where(F.col("r_regionkey") >= i)
+        ps.store.flush()
+    ps.stop()
+
+    for table in ("executions", "tasks", "task_deps", "transformation_groups"):
+        assert os.listdir(os.path.join(prov_dir, table)) == [f"{ps.run_id}.parquet"]
+    assert len(_disk(prov_dir, "tasks")) == 7
+    assert len(_disk(prov_dir, "transformation_groups")) == 3
+    (ex,) = _disk(prov_dir, "executions")
+    assert ex["run_id"] == ps.run_id and ex["end_time"] is not None
+
+
+def test_vacuum_then_flush_keeps_one_row_per_task(spark, sf_smoke, tmp_path):
+    """A live run that vacuums an older one and flushes again rewrites its
+    own files, one row per task and one executions row, and the dropped
+    run's files stay gone."""
+    from samba_spark.session import ProvSession
+
+    prov_dir = str(tmp_path / "p")
+    old = ProvSession(spark, name="old", prov_dir=prov_dir)
+    old.read_parquet(f"{sf_smoke}/region.parquet", "region").count()
+    old.stop()
+
+    new = ProvSession(spark, name="new", prov_dir=prov_dir)
+    a = new.read_parquet(f"{sf_smoke}/nation.parquet", "nation")
+    b = a.where(F.col("n_nationkey") >= 5)
+    new.store.flush()
+    res = new.store.vacuum(keep_latest=1)
+    assert res["dropped_runs"] == [old.run_id]
+    c = b.select("n_name")
+    b.set_name("b-renamed")
+    new.store.flush()
+    new.stop()
+
+    tasks = _disk(prov_dir, "tasks")
+    assert sorted(t["task_id"] for t in tasks) == sorted(
+        [a.task_id, b.task_id, c.task_id]
+    )
+    assert {t["run_id"] for t in tasks} == {new.run_id}
+    (ex,) = _disk(prov_dir, "executions")
+    assert ex["run_id"] == new.run_id and ex["end_time"] is not None
+    for table in ("executions", "tasks"):
+        assert not os.path.exists(
+            os.path.join(prov_dir, table, f"{old.run_id}.parquet")
+        )
+
+
+def test_set_schema_sets_element_values(engine, sf_smoke):
+    """A10: persist_elements writes ``values`` from the schema function,
+    not the default stringified columns."""
+    n = engine.read_parquet(f"{sf_smoke}/nation.parquet", "nation").with_elements()
+    small = n.where(F.col("n_nationkey") < 3)
+    small.set_schema(lambda df: F.array(
+        F.array(F.concat(F.lit("k="), F.col("n_nationkey").cast("string"))),
+        F.array(F.lit("tail")),
+    ))
+    small.persist_elements()
+    rows = (
+        engine.store.table("elements")
+        .where(F.col("task_id") == small.task_id)
+        .collect()
+    )
+    assert sorted(r["values"] for r in rows) == [
+        [[f"k={k}"], ["tail"]] for k in range(3)
+    ]
+
+
+def test_failed_drain_does_not_hide_later_writes(spark, tmp_path):
+    """A queued write that fails surfaces from flush(), and only after
+    every later queued write has finished."""
+    from concurrent.futures import wait
+
+    import pyarrow.parquet as pq
+
+    from samba_spark.prov.store import ProvStore
+
+    store = ProvStore(spark, str(tmp_path / "p"))
+    store.append_elements(spark.range(1).select(F.raise_error(F.lit("boom"))))
+    store.schedule_flush()
+    wait(store._flush_futures)  # the failing drain is over before the next
+    good = spark.range(50000).select(
+        F.lit("r").alias("run_id"),
+        F.lit("t").alias("task_id"),
+        F.col("id").cast("string").alias("element_id"),
+        F.col("id").cast("string").alias("dep_element_id"),
+    )
+    store.append_element_deps(good)
+    store.schedule_flush()
+    futures = list(store._flush_futures)
+    with pytest.raises(Exception, match="boom"):
+        store.flush()
+    assert all(f.done() for f in futures)
+    assert pq.read_table(str(tmp_path / "p" / "element_deps")).num_rows == 50000
+    store.close()
+
+
+def test_run_id_must_be_a_file_name_token(spark, tmp_path):
+    from samba_spark.prov.store import ProvStore
+
+    store = ProvStore(spark, str(tmp_path / "p"))
+    for bad in ("../x", "a/b", "*", "a.b", "", "x\n"):
+        with pytest.raises(ValueError, match="file-name token"):
+            store.write_execution(bad, "n", 1.0)
+    store.flush()
+    assert not os.path.exists(str(tmp_path / "p" / "executions"))

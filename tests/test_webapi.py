@@ -301,8 +301,9 @@ def test_serving_is_read_only(api, spark):
 
 
 def test_midrun_flushed_run_listed_once(spark, tmp_path):
-    """A run whose open row was flushed before it finished has two rows on
-    disk; the API lists it once, with its end_time."""
+    """A run whose open row was flushed before it finished still has one
+    row on disk, rewritten with its end_time; the API lists it once, with
+    its end_time."""
     import pyarrow.parquet as pq
 
     store = ProvStore(spark, str(tmp_path / "prov"))
@@ -310,7 +311,7 @@ def test_midrun_flushed_run_listed_once(spark, tmp_path):
     store.flush()
     store.finish_execution("run-1", 2.0)
     store.flush()
-    assert pq.read_table(str(tmp_path / "prov" / "executions")).num_rows == 2
+    assert pq.read_table(str(tmp_path / "prov" / "executions")).num_rows == 1
 
     web = ProvWebAPI(store)
     status, execs = _get(web, "/api/execution/list")
