@@ -498,7 +498,10 @@ class ProvStore:
 
     def table(self, name: str) -> DataFrame:
         """Read a provenance table, flushing first, so reads always see
-        every write made through this store."""
+        every write made through this store. The DataFrame lists its files
+        when it is made, and a later flush rewrites a run's metadata file
+        in place, so call ``table()`` again after a flush: Spark reads a
+        rewritten file with the length it listed."""
         self.flush()
         path = os.path.join(self.prov_dir, name)
         if not os.path.exists(path):

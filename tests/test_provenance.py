@@ -592,7 +592,8 @@ def test_failed_drain_does_not_hide_later_writes(spark, tmp_path):
     store = ProvStore(spark, str(tmp_path / "p"))
     store.append_elements(spark.range(1).select(F.raise_error(F.lit("boom"))))
     store.schedule_flush()
-    wait(store._flush_futures)  # the failing drain is over before the next
+    # the failing drain is over before the next
+    assert not wait(store._flush_futures, timeout=120).not_done
     good = spark.range(50000).select(
         F.lit("r").alias("run_id"),
         F.lit("t").alias("task_id"),
